@@ -47,7 +47,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from scio_db_spark.schemas import NOT_HTTP_RESPONSE_ID
+from scio_db_spark.schemas import NOT_HTTP_RESPONSE_ID, SENT_OR_DUPLICATED
 
 #: Output columns appended to the input rows by :func:`send_http_batch`.
 RESPONSE_FIELDS = (
@@ -272,6 +272,11 @@ def send_http_batch(
     """K4: post every row (expects ``title``/``body``/``user_id`` cols,
     see :func:`to_http_request`), appending the response columns.
 
+    A row whose ``send_status`` is ``SENT_OR_DUPLICATED`` gets the
+    constant duplicate response without a network call (D4,
+    StateAsyncParDoWithHttpHandler.scala:155-164), in the same pass
+    that POSTs the rest, so a ``ttl_dedup`` batch is read once.
+
     Distributed: each executor partition sends through its own bounded
     thread pool + token bucket. The returned DataFrame is lazy; the
     caller's write/collect action inside ``foreachBatch`` is the bundle
@@ -306,14 +311,20 @@ def send_http_batch(
         rr = itertools.count()
 
         def _send_row(row) -> tuple:
+            user_id = None if pd.isna(row.user_id) else int(row.user_id)
+            if getattr(row, "send_status", None) == SENT_OR_DUPLICATED:
+                # The reference classifies this response as SUCCESS (its
+                # body contains neither "error" nor "ko",
+                # MyHttpResponse.scala:19-27): a duplicate is a correctly
+                # handled record, not a failed send.
+                return (
+                    NOT_HTTP_RESPONSE_ID, None, SENT_OR_DUPLICATED, user_id,
+                    True, 0,
+                )
             if bucket is not None:
                 bucket.acquire()
             t0 = time.time()
-            payload = {
-                "title": row.title,
-                "body": row.body,
-                "userId": None if pd.isna(row.user_id) else int(row.user_id),
-            }
+            payload = {"title": row.title, "body": row.body, "userId": user_id}
             resp, _attempts = send_one(
                 urls[next(rr) % len(urls)], payload, retries=retries,
                 backoff_s=backoff_s, timeout=timeout,
@@ -396,8 +407,12 @@ def http_notification_sink(
         else:
             sent.foreach(lambda _row: None)  # force the sends, discard
 
-    writer = stream_df.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint
+    writer = (
+        stream_df.writeStream.foreachBatch(_process)
+        # update, not the default append, which Spark rejects for the
+        # update-mode state output of ttl_dedup
+        .outputMode("update")
+        .option("checkpointLocation", checkpoint)
     )
     if trigger:
         writer = writer.trigger(**trigger)

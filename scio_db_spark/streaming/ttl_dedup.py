@@ -21,17 +21,10 @@ and ``http/StateAsyncParDoWithHttpHandler.scala:86-95,105-164``) on
   without being emitted, mirroring the ``INITIAL_LOAD_`` short-circuit
   (StateAsyncParDoWithHttpHandler.scala:111-113,133-145).
 
-Two interchangeable state APIs, selected by capability:
-
-- ``transformWithStateInPandas`` (Spark 4's preferred API — explicit
-  per-key timers via ``registerTimer``, exactly Beam's State & Timer
-  shape) when protobuf is importable (its state-server protocol needs
-  it);
-- ``applyInPandasWithState`` (SURVEY.md §2.5-sanctioned fallback,
-  identical observable semantics) otherwise — the only runnable path
-  in this environment, which lacks protobuf.
-
-``ttl_dedup(api=...)`` forces either; the default picks by probe.
+One state implementation, ``applyInPandasWithState`` (SURVEY.md §2.5):
+Beam's explicit per-key timer is not needed for the contract, because
+the deadline is re-derived from the stored first-send time on every
+visit; the processing-time timeout only garbage-collects expired keys.
 
 Scale: state is hash-partitioned by key across executors in the
 RocksDB state store — ~1M live keys (BASELINE.md) fits comfortably,
@@ -48,7 +41,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 from pyspark.sql.types import StructType
 
 from scio_db_spark.schemas import SENT_OR_DUPLICATED
@@ -58,19 +50,6 @@ SENT = "SENT"
 _STATE_SCHEMA = "first_sent_ms long"
 
 
-def has_transform_with_state() -> bool:
-    """True when ``transformWithStateInPandas`` can actually run: its
-    Python worker talks to the JVM state server over protobuf, so the
-    API exists but dies at runtime without the package."""
-    import importlib.util
-
-    try:
-        # find_spec raises when even the parent "google" package is absent
-        return importlib.util.find_spec("google.protobuf") is not None
-    except ModuleNotFoundError:
-        return False
-
-
 def _apply_ttl_gate(
     chunks: list[pd.DataFrame],
     first_sent: int | None,
@@ -78,8 +57,8 @@ def _apply_ttl_gate(
     order_cols: list[str] | None,
     initial_col: str | None,
 ) -> tuple[pd.DataFrame | None, int | None]:
-    """Shared per-key core of both state APIs: mark SENT /
-    SENT_OR_DUPLICATED and advance the first-send watermark.
+    """Per-key core of the gate: mark SENT / SENT_OR_DUPLICATED and
+    advance the first-send watermark.
 
     All chunks for the key are materialized before ordering: Arrow may
     deliver one key's batch as several DataFrames, and a chunk-local
@@ -177,85 +156,6 @@ def _make_dedup_fn(
     return dedup_fn
 
 
-class TTLDedupProcessor(StatefulProcessor):
-    """``transformWithStateInPandas`` form of the TTL gate (W5/W6).
-
-    Explicit per-key timers (``registerTimer`` at first-send + TTL —
-    never re-armed by duplicates) map one-to-one onto the reference's
-    ``@TimerId``/``@OnTimer`` pair (StateAsyncParDoWithHttpHandler.
-    scala:86-95, StateBaseAsyncDoFn.java:156-166). Requires protobuf
-    (see :func:`has_transform_with_state`).
-    """
-
-    def __init__(
-        self,
-        ttl_ms: int,
-        order_cols: list[str] | None = None,
-        initial_col: str | None = None,
-        clock_ms=None,
-        use_timers: bool = True,
-    ) -> None:
-        self._ttl_ms = ttl_ms
-        self._order_cols = order_cols
-        self._initial_col = initial_col
-        self._clock_ms = clock_ms
-        self._use_timers = use_timers
-
-    def init(self, handle) -> None:
-        self._handle = handle
-        self._state = handle.getValueState("first_sent", _STATE_SCHEMA)
-
-    def _now_ms(self, timerValues) -> int:
-        if self._clock_ms is not None:
-            return self._clock_ms()
-        now = timerValues.getCurrentProcessingTimeInMs()
-        if now <= 0:
-            # timeMode="none" (use_timers=False) reports -1 — fall back
-            # to the wall clock so inline TTL expiry still works.
-            now = int(time.time() * 1000)
-        return now
-
-    def handleInputRows(self, key, rows, timerValues):
-        now = self._now_ms(timerValues)
-        cur = self._state.get()
-        first_sent = cur[0] if cur is not None else None
-        had_state = first_sent is not None
-        if first_sent is not None and now - first_sent >= self._ttl_ms:
-            first_sent = None  # timer not yet fired — expire inline
-        live_before = first_sent is not None
-        chunks = [pdf for pdf in rows if len(pdf)]
-        out, first_sent = _apply_ttl_gate(
-            chunks, first_sent, now, self._order_cols, self._initial_col
-        )
-        if out is not None:
-            yield out
-        if first_sent is not None:
-            if not live_before and self._use_timers:
-                # A NEW epoch started (no live state on entry — either
-                # a fresh key or an inline expiry): arm the timer
-                # relative to this epoch's FIRST send. Duplicates
-                # arrive with live_before=True and never re-arm it.
-                self._handle.registerTimer(int(first_sent) + self._ttl_ms)
-            self._state.update((int(first_sent),))
-        elif had_state:
-            self._state.clear()
-
-    def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-        # A stale timer from a previous epoch may fire after an inline
-        # expiry already started a new epoch — only clear state whose
-        # TTL has genuinely elapsed (cf. the hasTimedOut path of the
-        # fallback API, which re-derives the deadline the same way).
-        cur = self._state.get()
-        if cur is not None:
-            now = self._now_ms(timerValues)
-            if now - cur[0] >= self._ttl_ms:
-                self._state.clear()
-        return iter(())
-
-    def close(self) -> None:
-        pass
-
-
 def ttl_dedup(
     keyed_df: DataFrame,
     ttl_seconds: float,
@@ -266,17 +166,12 @@ def ttl_dedup(
     output_mode: str = "update",
     clock_ms=None,
     use_timers: bool = True,
-    api: str = "auto",
 ) -> DataFrame:
     """Apply the TTL dedup gate to a streaming keyed DataFrame.
 
     ``output_schema`` = input columns (minus ``initial_col``) plus
     ``send_status string``. ``clock_ms`` is injectable for
     deterministic tests (virtual clock).
-
-    ``api``: ``"auto"`` (transformWithStateInPandas when protobuf is
-    present, else applyInPandasWithState), or force either with
-    ``"transformWithState"`` / ``"applyInPandasWithState"``.
 
     ``use_timers=True`` (production, continuous queries) arms a
     per-key processing-time timer that garbage-collects expired state
@@ -288,24 +183,6 @@ def ttl_dedup(
     identical; only the state-GC mechanism differs (inline removal on
     the key's next visit instead of a background timer).
     """
-    if api == "auto":
-        api = (
-            "transformWithState"
-            if has_transform_with_state()
-            else "applyInPandasWithState"
-        )
-    if api == "transformWithState":
-        return keyed_df.groupBy(key_col).transformWithStateInPandas(
-            statefulProcessor=TTLDedupProcessor(
-                int(ttl_seconds * 1000), order_cols, initial_col,
-                clock_ms, use_timers,
-            ),
-            outputStructType=output_schema,
-            outputMode=output_mode.capitalize(),
-            timeMode="processingTime" if use_timers else "none",
-        )
-    if api != "applyInPandasWithState":
-        raise ValueError(f"unknown state api {api!r}")
     timeout = (
         GroupStateTimeout.ProcessingTimeTimeout
         if use_timers

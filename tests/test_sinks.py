@@ -134,6 +134,22 @@ def test_send_deduped_batch_posts_only_sent(spark, http_stub):
     sent = [r for r in out if r.send_status == "SENT"]
     assert sent[0].resp_id == 101 and sent[0].nhub_success
 
+    # The rule lives in send_http_batch itself: the same rows sent
+    # through it directly cost one more POST, and each duplicate gets
+    # the constant response.
+    from scio_db_spark.schemas import NOT_HTTP_RESPONSE_ID
+    from scio_db_spark.sinks import send_http_batch, to_http_request
+
+    direct = send_http_batch(to_http_request(df), _url(http_stub)).collect()
+    assert len(http_stub.requests) == 2
+    dups = [r for r in direct if r.send_status == "SENT_OR_DUPLICATED"]
+    assert len(dups) == 2
+    for r in dups:
+        assert (r.resp_id, r.resp_title, r.resp_body, r.resp_user_id) == (
+            NOT_HTTP_RESPONSE_ID, None, "SENT_OR_DUPLICATED", 7,
+        )
+        assert r.nhub_success and r.send_latency_ms == 0
+
 
 def test_write_sharded_and_windowed(spark, tmp_path):
     from scio_db_spark.sinks import write_sharded, write_windowed_batch
@@ -318,8 +334,8 @@ def test_as_int_rejects_out_of_int32_values():
 
 def test_send_http_batch_shards_across_url_list(spark):
     """A LIST of endpoint URLs round-robins per partition: every row
-    succeeds and BOTH receivers see traffic (the sharded receiver-tier
-    path bench_http.py measures)."""
+    succeeds and BOTH receivers see traffic (a sharded receiver
+    tier)."""
     servers = []
     for _ in range(2):
         s = ThreadingHTTPServer(("127.0.0.1", 0), _StubHandler)
@@ -359,3 +375,141 @@ def test_release_session_memory_unpersists_and_reports(spark):
     stats = release_session_memory(spark)
     assert stats["unpersisted"] >= 1
     assert stats["heap_after"] >= 0  # GC ran and re-measured
+
+
+DEDUP_IN = (
+    "idempotent_key string, notification_id string, message string, "
+    "customer_id string, ts double"
+)
+DEDUP_OUT = DEDUP_IN + ", send_status string"
+
+
+def test_http_notification_sink_takes_ttl_dedup_output(spark, http_stub):
+    """The streaming sink accepts the update-mode output of
+    ``ttl_dedup``: each SENT row is POSTed once, and each duplicate gets
+    the constant response without a POST."""
+    from scio_db_spark.schemas import NOT_HTTP_RESPONSE_ID
+    from scio_db_spark.sinks import http_notification_sink, to_http_request
+    from scio_db_spark.streaming.harness import StreamHarness
+    from scio_db_spark.streaming.ttl_dedup import ttl_dedup
+
+    h = StreamHarness(spark, DEDUP_IN)
+    try:
+        h.add_batch(
+            [
+                Row("k1", "n1", "m", "7", 1.0),
+                Row("k1", "n1b", "m", "7", 2.0),
+                Row("k1", "n1c", "m", "7", 3.0),
+                Row("k2", "n2", "m", "8", 1.0),
+            ],
+            wait=False,
+        )
+        stream = spark.readStream.schema(DEDUP_IN).parquet(h.input_dir)
+        deduped = ttl_dedup(
+            stream, ttl_seconds=3600, output_schema=DEDUP_OUT,
+            order_cols=["ts"], use_timers=False,
+        )
+        analytics = os.path.join(h.checkpoint_dir, "analytics")
+        http_notification_sink(
+            to_http_request(deduped), _url(http_stub),
+            os.path.join(h.checkpoint_dir, "send"),
+            analytics_path=analytics, trigger={"availableNow": True},
+            retries=0, throttle_rps=None,
+        ).awaitTermination()
+        out = {
+            r.notification_id: r
+            for r in spark.read.parquet(analytics).collect()
+        }
+    finally:
+        h.stop()
+
+    assert sorted(req["title"] for req in http_stub.requests) == ["n1", "n2"]
+    assert sorted(out) == ["n1", "n1b", "n1c", "n2"]
+    for nid in ("n1", "n2"):
+        assert out[nid].send_status == "SENT"
+        assert out[nid].resp_id == 101 and out[nid].nhub_success
+    for nid in ("n1b", "n1c"):
+        r = out[nid]
+        assert r.send_status == "SENT_OR_DUPLICATED"
+        assert (r.resp_id, r.resp_body, r.resp_user_id) == (
+            NOT_HTTP_RESPONSE_ID, "SENT_OR_DUPLICATED", 7,
+        )
+        assert r.nhub_success and r.send_latency_ms == 0
+
+
+def _file_clock(path: str):
+    """A ``clock_ms`` for Python workers, which share no memory: each
+    call returns the next reading scheduled in the JSON file at
+    ``path`` (the last one repeats) and counts itself there."""
+
+    def clock_ms() -> int:
+        import fcntl
+
+        with open(path, "r+") as fh:
+            fcntl.flock(fh, fcntl.LOCK_EX)
+            st = json.load(fh)
+            readings = st["readings"]
+            now = readings[min(st["calls"], len(readings) - 1)]
+            st["calls"] += 1
+            fh.seek(0)
+            fh.truncate()
+            json.dump(st, fh)
+        return now
+
+    return clock_ms
+
+
+def test_ttl_straddle_in_one_batch_sends_once(spark, http_stub, tmp_path):
+    """The clock readings inside one micro-batch straddle a key's TTL
+    deadline, as the clocks of two executors can. The row must still be
+    POSTed once and emitted once, as SENT. A send that reads the deduped
+    batch twice runs the state operator twice, once per reading, and
+    the row lands in both or neither of its SENT and duplicate
+    outcomes. The clock counts its calls, which are the state
+    function's runs: one per key per batch."""
+    from scio_db_spark.streaming.harness import StreamHarness
+    from scio_db_spark.streaming.mediation import send_deduped_batch
+    from scio_db_spark.streaming.ttl_dedup import ttl_dedup
+
+    ttl_ms, t0 = 1_000, 1_000_000
+    clock = tmp_path / "clock.json"
+    clock_ms = _file_clock(str(clock))
+    out = []
+
+    def _process(batch_df, _epoch_id):
+        out.extend(
+            send_deduped_batch(
+                batch_df, _url(http_stub), retries=0, throttle_rps=None
+            ).collect()
+        )
+
+    h = StreamHarness(spark, DEDUP_IN)
+
+    def run_batch(rows, *readings) -> int:
+        clock.write_text(json.dumps({"readings": list(readings), "calls": 0}))
+        h.add_batch(rows, wait=False)
+        stream = spark.readStream.schema(DEDUP_IN).parquet(h.input_dir)
+        ttl_dedup(
+            stream, ttl_seconds=ttl_ms / 1000, output_schema=DEDUP_OUT,
+            clock_ms=clock_ms, use_timers=False,
+        ).writeStream.foreachBatch(_process).outputMode("update").option(
+            "checkpointLocation", h.checkpoint_dir
+        ).trigger(availableNow=True).start().awaitTermination()
+        return json.loads(clock.read_text())["calls"]
+
+    try:
+        calls = [
+            run_batch([Row("k", "n1", "m", "7", 1.0)], t0),
+            # The first reading is at the deadline, the next just before.
+            run_batch(
+                [Row("k", "n2", "m", "7", 2.0)], t0 + ttl_ms, t0 + ttl_ms - 1
+            ),
+        ]
+    finally:
+        h.stop()
+
+    assert [req["title"] for req in http_stub.requests] == ["n1", "n2"]
+    assert sorted((r.notification_id, r.send_status) for r in out) == [
+        ("n1", "SENT"), ("n2", "SENT"),
+    ]
+    assert calls == [1, 1]

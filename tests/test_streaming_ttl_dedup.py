@@ -24,24 +24,7 @@ from pyspark.sql.types import (
 )
 
 from scio_db_spark.streaming.harness import StreamHarness
-from scio_db_spark.streaming.ttl_dedup import (
-    TTLDedupProcessor,
-    has_transform_with_state,
-    ttl_dedup,
-)
-
-# Both state APIs carry the same observable contract; the preferred
-# Spark 4 API only runs where protobuf exists (capability probe).
-APIS = [
-    "applyInPandasWithState",
-    pytest.param(
-        "transformWithState",
-        marks=pytest.mark.skipif(
-            not has_transform_with_state(),
-            reason="transformWithStateInPandas needs protobuf",
-        ),
-    ),
-]
+from scio_db_spark.streaming.ttl_dedup import ttl_dedup
 
 SCHEMA = StructType(
     [
@@ -69,11 +52,10 @@ def harness(spark):
     h.stop()
 
 
-@pytest.mark.parametrize("api", APIS)
-def test_three_duplicates_one_send(spark, harness, api):
+def test_three_duplicates_one_send(spark, harness):
     harness.start(
         lambda s: ttl_dedup(s, ttl_seconds=3600, output_schema=OUT,
-                            order_cols=["ts"], use_timers=False, api=api)
+                            order_cols=["ts"], use_timers=False)
     )
     harness.add_batch(
         [
@@ -173,139 +155,6 @@ def test_multichunk_key_sends_globally_first_row(spark):
             "spark.sql.execution.arrow.maxRecordsPerBatch", old
         )
         h.stop()
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas processor — pure-Python contract test.
-# The processor's logic is identical on both APIs (shared
-# _apply_ttl_gate core); this drives the timer/state choreography that
-# the protobuf-less environment can't exercise through Spark.
-# ---------------------------------------------------------------------------
-
-
-class _FakeValueState:
-    def __init__(self):
-        self.v = None
-
-    def get(self):
-        return self.v
-
-    def update(self, t):
-        self.v = tuple(t)
-
-    def clear(self):
-        self.v = None
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.state = _FakeValueState()
-        self.timers = []
-
-    def getValueState(self, name, schema, ttlDurationMs=None):
-        return self.state
-
-    def registerTimer(self, ts):
-        self.timers.append(ts)
-
-
-class _FakeTimerValues:
-    def __init__(self, now_ms):
-        self._now = now_ms
-
-    def getCurrentProcessingTimeInMs(self):
-        return self._now
-
-
-def test_twsp_processor_timer_and_state_choreography():
-    import pandas as pd
-
-    p = TTLDedupProcessor(ttl_ms=1000, order_cols=["ts"])
-    h = _FakeHandle()
-    p.init(h)
-
-    def batch(payloads, tss):
-        return pd.DataFrame(
-            {"idempotent_key": ["k"] * len(payloads),
-             "payload": payloads, "ts": tss}
-        )
-
-    # first batch: globally first-ordered row SENT, timer armed at
-    # first_send + ttl
-    out = list(
-        p.handleInputRows(("k",), iter([batch(list("abc"), [3.0, 1.0, 2.0])]),
-                          _FakeTimerValues(100))
-    )
-    assert len(out) == 1
-    assert list(out[0].sort_values("ts")["send_status"]) == [
-        "SENT", "SENT_OR_DUPLICATED", "SENT_OR_DUPLICATED",
-    ]
-    assert h.state.v == (100,)
-    assert h.timers == [1100]
-
-    # duplicate inside the TTL: emitted as duplicate, timer NOT re-armed
-    out2 = list(
-        p.handleInputRows(("k",), iter([batch(["d"], [4.0])]),
-                          _FakeTimerValues(600))
-    )
-    assert list(out2[0]["send_status"]) == ["SENT_OR_DUPLICATED"]
-    assert h.timers == [1100]
-
-    # timer fires → state cleared, nothing emitted
-    assert list(p.handleExpiredTimer(("k",), _FakeTimerValues(1200), None)) \
-        == []
-    assert h.state.v is None
-
-    # post-expiry row sends again with a fresh timer
-    out3 = list(
-        p.handleInputRows(("k",), iter([batch(["e"], [5.0])]),
-                          _FakeTimerValues(1300))
-    )
-    assert list(out3[0]["send_status"]) == ["SENT"]
-    assert h.timers == [1100, 2300]
-
-    # inline-expiry path: deadline passed but the timer callback hasn't
-    # run yet — the row must still send AND a fresh timer must be
-    # armed for the new epoch (live_before=False even though state
-    # existed on entry)
-    out4 = list(
-        p.handleInputRows(("k",), iter([batch(["f"], [6.0])]),
-                          _FakeTimerValues(9000))
-    )
-    assert list(out4[0]["send_status"]) == ["SENT"]
-    assert h.state.v == (9000,)
-    assert h.timers == [1100, 2300, 10000]
-
-    # a STALE timer from the pre-expiry epoch firing now must NOT wipe
-    # the live new epoch's state (its TTL hasn't elapsed)
-    assert list(p.handleExpiredTimer(("k",), _FakeTimerValues(9100), None)) \
-        == []
-    assert h.state.v == (9000,)
-    # ...but once the new epoch's TTL genuinely elapses, it clears
-    assert list(p.handleExpiredTimer(("k",), _FakeTimerValues(10000), None)) \
-        == []
-    assert h.state.v is None
-
-
-def test_twsp_processor_timemode_none_uses_wall_clock():
-    """timeMode='none' reports -1 from getCurrentProcessingTimeInMs;
-    the processor must fall back to the wall clock so inline TTL
-    expiry still works with use_timers=False."""
-    import pandas as pd
-
-    p = TTLDedupProcessor(ttl_ms=10, use_timers=False)
-    h = _FakeHandle()
-    p.init(h)
-    pdf = pd.DataFrame({"idempotent_key": ["k"], "payload": ["a"]})
-    out = list(p.handleInputRows(("k",), iter([pdf]), _FakeTimerValues(-1)))
-    assert list(out[0]["send_status"]) == ["SENT"]
-    assert h.state.v is not None and h.state.v[0] > 0
-    assert h.timers == []  # use_timers=False never arms
-    import time as _t
-
-    _t.sleep(0.05)  # > ttl_ms
-    out2 = list(p.handleInputRows(("k",), iter([pdf]), _FakeTimerValues(-1)))
-    assert list(out2[0]["send_status"]) == ["SENT"]  # inline expiry fired
 
 
 def test_streaming_distinct_by_key_bounded_state(spark):

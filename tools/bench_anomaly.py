@@ -1,6 +1,6 @@
 """Streaming rolling-anomaly throughput (records/min).
 
-Sibling of bench_throughput.py / bench_corpus_ingest.py: pushes N
+Sibling of bench_corpus_ingest.py: pushes N
 synthetic keyed readings through the stateful k-sigma detector
 (streaming/anomaly.py::anomaly_detect_stream — per-key state is three
 integers) and reports records/min against the reference's 200K/min

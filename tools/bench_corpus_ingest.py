@@ -1,6 +1,6 @@
 """Streaming corpus-ingestion throughput (records/min).
 
-Sibling of bench_throughput.py: pushes N synthetic documents through
+Pushes N synthetic documents through
 the FULL streaming corpus job — enrich (hash/tokens/lang/quality) →
 quality gate with observe() metrics → bounded-state exact dedup →
 windowed OK files + dead-letter KO files
