@@ -376,7 +376,6 @@ def http_notification_sink(
     url: str,
     checkpoint: str,
     analytics_path: str | None = None,
-    analytics_fmt: str = "parquet",
     trigger: dict | None = None,
     **send_kwargs,
 ):
@@ -395,7 +394,7 @@ def http_notification_sink(
     from scio_db_spark.sinks.files import idempotent_batch_writer
 
     analytics_writer = (
-        idempotent_batch_writer(analytics_path, fmt=analytics_fmt)
+        idempotent_batch_writer(analytics_path)
         if analytics_path is not None
         else None
     )
@@ -405,7 +404,8 @@ def http_notification_sink(
         if analytics_writer is not None:
             analytics_writer(sent, epoch_id)
         else:
-            sent.foreach(lambda _row: None)  # force the sends, discard
+            # force the sends, keep nothing
+            sent.write.format("noop").mode("overwrite").save()
 
     writer = (
         stream_df.writeStream.foreachBatch(_process)

@@ -43,6 +43,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import StructType
 
+from scio_db_spark.operators.keying import KEY_COL
 from scio_db_spark.schemas import SENT_OR_DUPLICATED
 
 SENT = "SENT"
@@ -160,14 +161,13 @@ def ttl_dedup(
     keyed_df: DataFrame,
     ttl_seconds: float,
     output_schema: str | StructType,
-    key_col: str = "idempotent_key",
     order_cols: list[str] | None = None,
     initial_col: str | None = None,
-    output_mode: str = "update",
     clock_ms=None,
     use_timers: bool = True,
 ) -> DataFrame:
-    """Apply the TTL dedup gate to a streaming keyed DataFrame.
+    """Apply the TTL dedup gate to a streaming DataFrame keyed by
+    ``idempotent_key``; the output is in update mode.
 
     ``output_schema`` = input columns (minus ``initial_col``) plus
     ``send_status string``. ``clock_ms`` is injectable for
@@ -188,13 +188,13 @@ def ttl_dedup(
         if use_timers
         else GroupStateTimeout.NoTimeout
     )
-    return keyed_df.groupBy(key_col).applyInPandasWithState(
+    return keyed_df.groupBy(KEY_COL).applyInPandasWithState(
         func=_make_dedup_fn(
             int(ttl_seconds * 1000), order_cols, initial_col, clock_ms,
             use_timers,
         ),
         outputStructType=output_schema,
         stateStructType=_STATE_SCHEMA,
-        outputMode=output_mode,
+        outputMode="update",
         timeoutConf=timeout,
     )

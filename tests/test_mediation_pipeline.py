@@ -8,6 +8,9 @@ the full routing contract.
 
 from __future__ import annotations
 
+import shutil
+
+import pytest
 from pyspark.sql import Row
 
 from scio_db_spark.streaming.harness import StreamHarness
@@ -85,3 +88,133 @@ def test_mediation_ko_branch(spark):
         (None, "n2"),
         ("tx3", None),
     }
+
+
+def _hist(spark, path, *keys):
+    spark.createDataFrame(
+        [Row(idempotent_key=k) for k in keys]
+    ).coalesce(1).write.mode("append").parquet(str(path))
+
+
+def _sent(rows):
+    return sorted((r.idempotent_key, r.send_status) for r in rows)
+
+
+def test_historical_set_is_read_once_at_build(spark, tmp_path):
+    """The historical key set is read when the pipeline is built, not in
+    every micro-batch: with its files deleted after the first batch,
+    the next batch still drops the historical key and sends the new
+    one. (The harness rebuilds the pipeline each batch, so the rebuild
+    must reuse the cached set rather than read the files again.)"""
+    hist_dir = tmp_path / "hist"
+    _hist(spark, hist_dir, "tx0-9")
+    hist = spark.read.parquet(str(hist_dir))
+
+    h = StreamHarness(spark, FLAT)
+    h.start(
+        lambda s: build_mediation_core(
+            s, historical_df=hist, ttl_seconds=3600, use_timers=False,
+        )["deduped"]
+    )
+    try:
+        h.add_batch([_ber("tx1", "n1", "1")])
+        shutil.rmtree(hist_dir)
+        h.add_batch([_ber("tx0", "n0", "9"), _ber("tx2", "n2", "2")])
+        rows = h.results()
+    finally:
+        h.stop()
+    assert _sent(rows) == [("tx1-1", "SENT"), ("tx2-2", "SENT")]
+
+
+@pytest.mark.parametrize("writer", ["spark", "outside_then_refresh"])
+def test_rebuild_over_changed_historical_dir_drops_new_key(
+    spark, tmp_path, writer
+):
+    """A pipeline rebuilt over a historical directory that gained a key
+    drops that key. A write through this session refreshes the cached
+    set by itself; files written from outside Spark need
+    ``refreshByPath`` before the rebuild."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    hist_dir = tmp_path / "hist"
+    _hist(spark, hist_dir, "tx0-9")
+
+    h = StreamHarness(spark, FLAT)
+    # Each harness pass rebuilds the pipeline over a fresh read.
+    h.start(
+        lambda s: build_mediation_core(
+            s, historical_df=spark.read.parquet(str(hist_dir)),
+            ttl_seconds=3600, use_timers=False,
+        )["deduped"]
+    )
+    try:
+        h.add_batch([_ber("tx0", "n0", "9"), _ber("tx1", "n1", "1")])
+        if writer == "spark":
+            _hist(spark, hist_dir, "tx7-7")
+        else:
+            pq.write_table(
+                pa.table({"idempotent_key": ["tx7-7"]}),
+                str(hist_dir / "added.parquet"),
+            )
+            spark.catalog.refreshByPath(str(hist_dir))
+        h.add_batch([_ber("tx7", "n7", "7"), _ber("tx8", "n8", "8")])
+        rows = h.results()
+    finally:
+        h.stop()
+    assert _sent(rows) == [("tx1-1", "SENT"), ("tx8-8", "SENT")]
+
+
+@pytest.mark.parametrize("threshold", [None, "-1"])
+def test_size_statistics_pick_the_historical_join(spark, tmp_path, threshold):
+    """The measured size of the cached key set picks the join: broadcast
+    under the session's default threshold, shuffle with broadcasting
+    off. Both drop the same rows, and neither micro-batch plan scans
+    the historical files."""
+    hist_dir = tmp_path / "hist"
+    _hist(spark, hist_dir, "tx0-9", "tx5-5")
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    default = spark.conf.get(key)
+    out: list = []
+    h = StreamHarness(spark, FLAT)
+    try:
+        if threshold is not None:
+            spark.conf.set(key, threshold)
+        h.add_batch(
+            [_ber("tx0", "n0", "9"), _ber("tx1", "n1", "1"),
+             _ber("tx5", "n5", "5")],
+            wait=False,
+        )
+        stream = spark.readStream.schema(FLAT).parquet(h.input_dir)
+        deduped = build_mediation_core(
+            stream, historical_df=spark.read.parquet(str(hist_dir)),
+            ttl_seconds=3600, use_timers=False,
+        )["deduped"]
+        query = (
+            deduped.writeStream.foreachBatch(
+                lambda b, _e: out.extend(b.collect())
+            )
+            .outputMode("update")
+            .option("checkpointLocation", h.checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+        plan = query._jsq.explainInternal(False)
+        # The cached set's own plan prints under InMemoryTableScan, so
+        # look for scans among the leaves of the micro-batch plan.
+        leaves = (
+            query._jsq.streamingQuery().lastExecution().executedPlan()
+            .collectLeaves()
+        )
+        scans = [
+            leaves.apply(i).simpleString(100) for i in range(leaves.size())
+        ]
+    finally:
+        spark.conf.set(key, default)
+        h.stop()
+
+    assert _sent(out) == [("tx1-1", "SENT")]
+    assert ("BroadcastExchange" in plan) == (threshold is None)
+    assert any(scan.startswith("InMemoryTableScan") for scan in scans)
+    assert not any(str(hist_dir) in scan for scan in scans)

@@ -384,11 +384,10 @@ DEDUP_IN = (
 DEDUP_OUT = DEDUP_IN + ", send_status string"
 
 
-def test_http_notification_sink_takes_ttl_dedup_output(spark, http_stub):
-    """The streaming sink accepts the update-mode output of
-    ``ttl_dedup``: each SENT row is POSTed once, and each duplicate gets
-    the constant response without a POST."""
-    from scio_db_spark.schemas import NOT_HTTP_RESPONSE_ID
+def _sink_over_ttl_dedup(spark, http_stub, analytics: bool) -> dict:
+    """Run ``http_notification_sink`` over ``ttl_dedup`` output for one
+    batch holding three rows of k1 and one of k2; return the analytics
+    rows by notification id (empty when ``analytics`` is off)."""
     from scio_db_spark.sinks import http_notification_sink, to_http_request
     from scio_db_spark.streaming.harness import StreamHarness
     from scio_db_spark.streaming.ttl_dedup import ttl_dedup
@@ -409,20 +408,30 @@ def test_http_notification_sink_takes_ttl_dedup_output(spark, http_stub):
             stream, ttl_seconds=3600, output_schema=DEDUP_OUT,
             order_cols=["ts"], use_timers=False,
         )
-        analytics = os.path.join(h.checkpoint_dir, "analytics")
+        path = os.path.join(h.checkpoint_dir, "analytics")
         http_notification_sink(
             to_http_request(deduped), _url(http_stub),
             os.path.join(h.checkpoint_dir, "send"),
-            analytics_path=analytics, trigger={"availableNow": True},
+            analytics_path=path if analytics else None,
+            trigger={"availableNow": True},
             retries=0, throttle_rps=None,
         ).awaitTermination()
-        out = {
-            r.notification_id: r
-            for r in spark.read.parquet(analytics).collect()
+        if not analytics:
+            return {}
+        return {
+            r.notification_id: r for r in spark.read.parquet(path).collect()
         }
     finally:
         h.stop()
 
+
+def test_http_notification_sink_takes_ttl_dedup_output(spark, http_stub):
+    """The streaming sink accepts the update-mode output of
+    ``ttl_dedup``: each SENT row is POSTed once, and each duplicate gets
+    the constant response without a POST."""
+    from scio_db_spark.schemas import NOT_HTTP_RESPONSE_ID
+
+    out = _sink_over_ttl_dedup(spark, http_stub, analytics=True)
     assert sorted(req["title"] for req in http_stub.requests) == ["n1", "n2"]
     assert sorted(out) == ["n1", "n1b", "n1c", "n2"]
     for nid in ("n1", "n2"):
@@ -435,6 +444,13 @@ def test_http_notification_sink_takes_ttl_dedup_output(spark, http_stub):
             NOT_HTTP_RESPONSE_ID, "SENT_OR_DUPLICATED", 7,
         )
         assert r.nhub_success and r.send_latency_ms == 0
+
+
+def test_http_notification_sink_send_only(spark, http_stub):
+    """Without an analytics path the sink still forces the sends: each
+    SENT row is POSTed once and no duplicate is POSTed."""
+    _sink_over_ttl_dedup(spark, http_stub, analytics=False)
+    assert sorted(req["title"] for req in http_stub.requests) == ["n1", "n2"]
 
 
 def _file_clock(path: str):
