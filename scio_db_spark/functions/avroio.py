@@ -599,39 +599,6 @@ def spark_schema_of(avro_schema) -> T.StructType:
 # ---------------------------------------------------------------------------
 
 
-def _py(v):
-    """Pandas/numpy cell → plain Python for the encoder.
-
-    Only used by pandas-shaped call sites (deserialize_avro's inverse
-    direction and external callers). The write/serialize hot paths now
-    run on ``mapInArrow`` + ``RecordBatch.to_pylist()``, which yields
-    plain-Python values with EXACT null fidelity from the Arrow
-    validity bitmap — a Spark NULL arrives as None and a genuine NaN
-    payload arrives as float('nan'), so NaN doubles survive to the
-    wire exactly like the JVM connector jar writes them. On this
-    legacy pandas path the two are indistinguishable (both NaN), and
-    null fidelity is chosen over NaN fidelity.
-    """
-    import numpy as np
-    import pandas as pd
-
-    if v is None or v is pd.NaT:
-        return None
-    if isinstance(v, float) and v != v:  # NaN (see docstring)
-        return None
-    if isinstance(v, np.generic):
-        return v.item()
-    if isinstance(v, pd.Timestamp):
-        return v.to_pydatetime()
-    if isinstance(v, np.ndarray):
-        return [_py(x) for x in v.tolist()]
-    if isinstance(v, (list, tuple)):
-        return [_py(x) for x in v]
-    if isinstance(v, dict):
-        return {k: _py(x) for k, x in v.items()}
-    return v
-
-
 def probe_writer_schema(path: str | list) -> dict:
     """Driver-side writer-schema probe shared by every jar-less Avro
     reader: resolves explicit files, directories, and globs (including
@@ -683,19 +650,28 @@ def read_avro(spark: SparkSession, path: str | list) -> DataFrame:
         .option("pathGlobFilter", "*.avro")
         .load(paths)
     )
-    schema = probe_writer_schema(paths)
-    out_schema = spark_schema_of(schema)
-    cols = [f.name for f in out_schema.fields]
+    return decode_containers(
+        bin_df, spark_schema_of(probe_writer_schema(paths))
+    )
 
-    # Arrow batches in and out: the decoded values are plain Python
-    # (None for Avro null, float('nan') for a genuine NaN double), and
-    # building the output arrays directly in Arrow preserves that
-    # distinction — the pandas route would fold NaN payloads back into
-    # nulls on the return conversion.
+
+def decode_containers(bin_df: DataFrame, out_schema: T.StructType) -> DataFrame:
+    """Decode the ``content`` column of a ``binaryFile`` DataFrame, one
+    Avro container per row, into ``out_schema`` rows executor-side.
+    Shared by the batch ``read_avro`` and the streaming
+    ``read_stream_avro``.
+
+    mapInArrow, not mapInPandas: the decoded values are plain Python
+    (None for Avro null, float('nan') for a genuine NaN double), and
+    building the output arrays directly in Arrow preserves that
+    distinction — the pandas route would fold NaN payloads back into
+    nulls on the return conversion.
+    """
     import pyarrow as pa
 
     from pyspark.sql.pandas.types import to_arrow_type
 
+    cols = [f.name for f in out_schema.fields]
     arrow_fields = [
         (f.name, to_arrow_type(f.dataType)) for f in out_schema.fields
     ]

@@ -180,6 +180,7 @@ def dead_letter_sink(
     ts_col: str = "event_time",
     window_duration: str = "30 seconds",
     fmt: str = "parquet",
+    trigger: dict | None = None,
 ):
     """K5: toxic/dead-letter routing — K1 under ``<base>/toxic/``.
 
@@ -193,6 +194,7 @@ def dead_letter_sink(
         ts_col=ts_col,
         window_duration=window_duration,
         fmt=fmt,
+        trigger=trigger,
     )
 
 
@@ -229,32 +231,18 @@ def _epoch_overwrite(
     partition_cols: list[str],
     epoch_id: int,
 ) -> None:
-    """Shared exactly-once body: epoch column + dynamic per-partition
-    overwrite, with the conf saved and restored (the one copy of the
-    subtle dance both idempotent_batch_writer and the windowed sink's
-    epoch leg rely on)."""
-    out = batch_df.withColumn("epoch", F.lit(int(epoch_id)))
-    spark = batch_df.sparkSession
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            out.write.format(fmt)
-            .mode("overwrite")
-            .partitionBy("epoch", *partition_cols)
-            .save(path)
-        )
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
-        else:
-            # conf.get(key, None) is None when the key was never
-            # SET (not the effective default) — unset, or dynamic
-            # overwrite leaks into the session and later plain
-            # overwrites silently keep stale partitions.
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    """Shared exactly-once body of idempotent_batch_writer and the
+    windowed sink's epoch leg: epoch column + dynamic per-partition
+    overwrite. The mode is a writer option, so the session conf is
+    never touched."""
+    (
+        batch_df.withColumn("epoch", F.lit(int(epoch_id)))
+        .write.format(fmt)
+        .mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("epoch", *partition_cols)
+        .save(path)
+    )
 
 
 def debug_sink(stream_df: DataFrame, num_rows: int = 20, truncate: bool = True):

@@ -197,7 +197,7 @@ def read_stream_avro(
 
     A streaming ``binaryFile`` scan (explicit schema — streaming
     sources can't infer) ships each newly-arrived ``.avro`` shard as
-    one row; a mapInPandas stage decodes containers executor-side with
+    one row; ``decode_containers`` decodes them executor-side with
     the pure-Python codec. Parallelism = files per micro-batch, the
     contract sharded Avro producers (the reference's windowed sinks)
     already provide. ``avro_schema`` (JSON/dict) can pin the writer
@@ -208,9 +208,9 @@ def read_stream_avro(
     ``spark.readStream.format("avro")`` — this is the jar-less path.
     """
     from scio_db_spark.functions.avroio import (
+        decode_containers,
         parse_schema,
         probe_writer_schema,
-        read_container,
         spark_schema_of,
     )
 
@@ -222,10 +222,6 @@ def read_stream_avro(
                 f"{e}; pass avro_schema= explicitly for an "
                 "initially-empty dir"
             ) from None
-    schema = parse_schema(avro_schema)
-    out_schema = spark_schema_of(schema)
-    cols = [f.name for f in out_schema.fields]
-
     reader = (
         spark.readStream.format("binaryFile")
         .schema(_BINARY_FILE_SCHEMA)
@@ -235,35 +231,9 @@ def read_stream_avro(
         reader = reader.option(
             "maxFilesPerTrigger", str(max_files_per_trigger)
         )
-    bin_df = reader.load(path)
-
-    # mapInArrow, NOT mapInPandas: the pandas boundary folds genuine
-    # NaN double payloads into NULLs on the return conversion, so the
-    # streaming read would disagree with the batch read_avro on
-    # NaN-vs-NULL — the wire-fidelity contract both must share.
-    import pyarrow as pa
-
-    from pyspark.sql.pandas.types import to_arrow_type
-
-    arrow_fields = [
-        (f.name, to_arrow_type(f.dataType)) for f in out_schema.fields
-    ]
-
-    def decode(batches):
-        for batch in batches:
-            for content in batch.column("content").to_pylist():
-                _, records = read_container(bytes(content))
-                yield pa.RecordBatch.from_arrays(
-                    [
-                        pa.array(
-                            [r.get(name) for r in records], type=typ
-                        )
-                        for name, typ in arrow_fields
-                    ],
-                    names=cols,
-                )
-
-    return bin_df.select("content").mapInArrow(decode, out_schema)
+    return decode_containers(
+        reader.load(path), spark_schema_of(parse_schema(avro_schema))
+    )
 
 
 def read_stream_rate(

@@ -232,7 +232,7 @@ def anomaly_detect_stream(
     out_fields = ", ".join(
         f"{c} {schema_in[c].dataType.simpleString()}" for c in passthrough
     )
-    output_schema = (
+    out_type = (
         f"{out_fields}, is_scored boolean, is_anomaly boolean, n_prev long"
     )
     return keyed.groupBy(key_col).applyInPandasWithState(
@@ -245,7 +245,7 @@ def anomaly_detect_stream(
             passthrough,
             idle_timeout_ms,
         ),
-        outputStructType=output_schema,
+        outputStructType=out_type,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=(

@@ -99,12 +99,12 @@ def cusum_detect_stream(
     out_fields = ", ".join(
         f"{c} {schema_in[c].dataType.simpleString()}" for c in passthrough
     )
-    output_schema = f"{out_fields}, cusum long, is_alarm boolean"
+    out_type = f"{out_fields}, cusum long, is_alarm boolean"
     return keyed.groupBy(key_col).applyInPandasWithState(
         func=_make_cusum_fn(
             order_cols, target, threshold, passthrough, idle_timeout_ms
         ),
-        outputStructType=output_schema,
+        outputStructType=out_type,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=(

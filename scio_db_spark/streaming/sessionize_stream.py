@@ -101,7 +101,7 @@ def sessionize_stream(
     out_fields = ", ".join(
         f"{c} {schema_in[c].dataType.simpleString()}" for c in passthrough
     )
-    output_schema = f"{out_fields}, session_id long, send_status string"
+    out_type = f"{out_fields}, session_id long, send_status string"
     return stream_df.groupBy(*key_cols).applyInPandasWithState(
         func=_make_session_fn(
             ts_col,
@@ -110,7 +110,7 @@ def sessionize_stream(
             passthrough,
             idle_timeout_ms,
         ),
-        outputStructType=output_schema,
+        outputStructType=out_type,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
         timeoutConf=(

@@ -1,4 +1,4 @@
-"""Stateful TTL deduplication (D2/D3/D4) on Structured Streaming.
+"""Stateful TTL deduplication (D2/D4) on Structured Streaming.
 
 Re-expresses the reference's State & Timer pattern
 (``/root/reference/src/main/scala/com.db.myproject/mediation/http/state/StateBaseAsyncDoFn.java:30-34,68-93,156-166``
@@ -16,10 +16,14 @@ and ``http/StateAsyncParDoWithHttpHandler.scala:86-95,105-164``) on
   on first buffering, StateAsyncParDoWithHttpHandler.scala:86-95);
   duplicates do NOT extend it. Since ``GroupStateTimeout`` resets on
   every invocation, the deadline is re-derived from the stored
-  first-send time each time — after expiry the key sends again;
-- initial-load rows (D3) — marked by ``initial_col`` — seed state
-  without being emitted, mirroring the ``INITIAL_LOAD_`` short-circuit
-  (StateAsyncParDoWithHttpHandler.scala:111-113,133-145).
+  first-send time each time — after expiry the key sends again.
+
+The reference also seeds its state with ``INITIAL_LOAD_`` rows so that
+already-notified records are never sent (D3,
+StateAsyncParDoWithHttpHandler.scala:111-113,133-145). Here the J1
+anti-join against the historical key set does that upstream of this
+gate (``build_mediation_core``), so the gate's state holds live sends
+only.
 
 One state implementation, ``applyInPandasWithState`` (SURVEY.md §2.5):
 Beam's explicit per-key timer is not needed for the contract, because
@@ -41,7 +45,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import StructType
 
 from scio_db_spark.operators.keying import KEY_COL
 from scio_db_spark.schemas import SENT_OR_DUPLICATED
@@ -56,7 +59,6 @@ def _apply_ttl_gate(
     first_sent: int | None,
     now: int,
     order_cols: list[str] | None,
-    initial_col: str | None,
 ) -> tuple[pd.DataFrame | None, int | None]:
     """Per-key core of the gate: mark SENT / SENT_OR_DUPLICATED and
     advance the first-send watermark.
@@ -87,28 +89,14 @@ def _apply_ttl_gate(
     if not chunks:
         return None, first_sent
     pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks)
-    if initial_col is not None:
-        # NULL flags arrive as float NaN through Arrow→pandas, and
-        # NaN.astype(bool) is True — which would silently swallow a
-        # live record into the seed branch (never SENT). A null flag
-        # means "not an initial-load row": fill False first.
-        flags = pdf[initial_col].fillna(False).astype(bool)
-        seed = pdf[flags]
-        pdf = pdf[~flags]
-        if len(seed) and first_sent is None:
-            first_sent = now  # D3: seed state, emit nothing
     if order_cols:
         pdf = pdf.sort_values(order_cols)
-    if not len(pdf):
-        return None, first_sent
     if first_sent is None:
         statuses = [SENT] + [SENT_OR_DUPLICATED] * (len(pdf) - 1)
         first_sent = now
     else:
         statuses = [SENT_OR_DUPLICATED] * len(pdf)
     out = pdf.copy()
-    if initial_col is not None:
-        out = out.drop(columns=[initial_col])
     out["send_status"] = statuses
     return out, first_sent
 
@@ -116,7 +104,6 @@ def _apply_ttl_gate(
 def _make_dedup_fn(
     ttl_ms: int,
     order_cols: list[str] | None,
-    initial_col: str | None,
     clock_ms=None,
     use_timers: bool = True,
 ):
@@ -137,9 +124,7 @@ def _make_dedup_fn(
             # (timeouts reset on every invocation) — expire inline.
             first_sent = None
         chunks = [pdf for pdf in pdfs if len(pdf)]
-        out, first_sent = _apply_ttl_gate(
-            chunks, first_sent, now, order_cols, initial_col
-        )
+        out, first_sent = _apply_ttl_gate(chunks, first_sent, now, order_cols)
         if out is not None:
             yield out
         if first_sent is not None:
@@ -149,10 +134,6 @@ def _make_dedup_fn(
                 # duplicates never extend the TTL.
                 remaining = max(1, first_sent + ttl_ms - now)
                 state.setTimeoutDuration(int(remaining))
-        elif state.exists:
-            # Inline-expired with no new send this batch: GC the key now
-            # (the timer would have done this in onTtl).
-            state.remove()
 
     return dedup_fn
 
@@ -160,16 +141,14 @@ def _make_dedup_fn(
 def ttl_dedup(
     keyed_df: DataFrame,
     ttl_seconds: float,
-    output_schema: str | StructType,
     order_cols: list[str] | None = None,
-    initial_col: str | None = None,
     clock_ms=None,
     use_timers: bool = True,
 ) -> DataFrame:
     """Apply the TTL dedup gate to a streaming DataFrame keyed by
     ``idempotent_key``; the output is in update mode.
 
-    ``output_schema`` = input columns (minus ``initial_col``) plus
+    The output is the input columns (every field nullable) plus
     ``send_status string``. ``clock_ms`` is injectable for
     deterministic tests (virtual clock).
 
@@ -188,12 +167,14 @@ def ttl_dedup(
         if use_timers
         else GroupStateTimeout.NoTimeout
     )
+    out_cols = [
+        f"{f.name} {f.dataType.simpleString()}" for f in keyed_df.schema.fields
+    ]
     return keyed_df.groupBy(KEY_COL).applyInPandasWithState(
         func=_make_dedup_fn(
-            int(ttl_seconds * 1000), order_cols, initial_col, clock_ms,
-            use_timers,
+            int(ttl_seconds * 1000), order_cols, clock_ms, use_timers
         ),
-        outputStructType=output_schema,
+        outputStructType=", ".join(out_cols) + ", send_status string",
         stateStructType=_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=timeout,

@@ -50,21 +50,20 @@ def _wait_until(pred, timeout=90.0):
     return False
 
 
-@pytest.mark.slow
-def test_run_mediation_pipeline_end_to_end(spark):
-    import datetime
-
+def _start_stub():
     server = ThreadingHTTPServer(("127.0.0.1", 0), _Stub)
     server.requests = []
     threading.Thread(target=server.serve_forever, daemon=True).start()
-    url = f"http://127.0.0.1:{server.server_address[1]}/posts"
+    return server, f"http://127.0.0.1:{server.server_address[1]}/posts"
 
-    root = tempfile.mkdtemp(prefix="med_e2e_")
+
+def _start_pipeline(spark, url, root, **kwargs) -> dict:
+    """Drop one file (two copies of tx1, one invalid row, tx3) into
+    ``<root>/in`` and start ``run_mediation_pipeline`` over it."""
+    import datetime
+
     input_dir = os.path.join(root, "in")
     os.makedirs(input_dir)
-    analytics = os.path.join(root, "analytics")
-    dead = os.path.join(root, "dead")
-
     et = datetime.datetime(2024, 1, 1, 0, 0, 0)
     rows = [
         Row("tx1", "n1", "1", "m", et, 1.0),
@@ -85,17 +84,36 @@ def test_run_mediation_pipeline_end_to_end(spark):
     )
 
     stream = spark.readStream.schema(FLAT).parquet(input_dir)
-    queries = run_mediation_pipeline(
+    return run_mediation_pipeline(
         stream,
         url=url,
         checkpoint_dir=os.path.join(root, "ck"),
-        dead_letter_path=dead,
-        analytics_path=analytics,
+        dead_letter_path=os.path.join(root, "dead"),
+        analytics_path=os.path.join(root, "analytics"),
         ttl_seconds=3600,
         window_duration="30 seconds",
         retries=0,
         throttle_rps=None,
+        **kwargs,
     )
+
+
+def _status_counts(spark, analytics: str) -> dict:
+    out = spark.read.parquet(analytics)
+    return {
+        r.send_status: r.n
+        for r in out.groupBy("send_status").count()
+        .withColumnRenamed("count", "n").collect()
+    }
+
+
+@pytest.mark.slow
+def test_run_mediation_pipeline_end_to_end(spark):
+    server, url = _start_stub()
+    root = tempfile.mkdtemp(prefix="med_e2e_")
+    analytics = os.path.join(root, "analytics")
+    dead = os.path.join(root, "dead")
+    queries = _start_pipeline(spark, url, root)
     try:
         def _analytics_ready():
             try:
@@ -104,14 +122,10 @@ def test_run_mediation_pipeline_end_to_end(spark):
                 return False
 
         assert _wait_until(_analytics_ready), "analytics output missing"
-        out = spark.read.parquet(analytics)
-        by_status = {
-            r.send_status: r.n
-            for r in out.groupBy("send_status").count()
-            .withColumnRenamed("count", "n").collect()
-        }
         # tx1-1 + tx3-3 SENT; tx1-1 second copy duplicated.
-        assert by_status == {"SENT": 2, "SENT_OR_DUPLICATED": 1}
+        assert _status_counts(spark, analytics) == {
+            "SENT": 2, "SENT_OR_DUPLICATED": 1
+        }
         assert len(server.requests) == 2  # only SENT rows hit the wire
 
         def _dead_ready():
@@ -124,6 +138,32 @@ def test_run_mediation_pipeline_end_to_end(spark):
 
         assert _wait_until(_dead_ready), "dead-letter output missing"
         toxic = spark.read.parquet(os.path.join(dead, "toxic"))
+        assert [r.notification_id for r in toxic.collect()] == ["n2"]
+    finally:
+        for q in queries.values():
+            q.stop()
+        server.shutdown()
+
+
+@pytest.mark.slow
+def test_available_now_trigger_ends_both_queries(spark):
+    """A bounded run (``trigger={"availableNow": True}``) drains the
+    input and ends: the dead-letter query runs under the same trigger
+    as the send query, so neither keeps polling for new files."""
+    server, url = _start_stub()
+    root = tempfile.mkdtemp(prefix="med_e2e_now_")
+    queries = _start_pipeline(
+        spark, url, root, trigger={"availableNow": True}
+    )
+    try:
+        for name, q in queries.items():
+            assert q.awaitTermination(60), f"{name} still running"
+            assert q.exception() is None, name
+        assert _status_counts(spark, os.path.join(root, "analytics")) == {
+            "SENT": 2, "SENT_OR_DUPLICATED": 1
+        }
+        assert len(server.requests) == 2
+        toxic = spark.read.parquet(os.path.join(root, "dead", "toxic"))
         assert [r.notification_id for r in toxic.collect()] == ["n2"]
     finally:
         for q in queries.values():

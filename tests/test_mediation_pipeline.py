@@ -70,8 +70,7 @@ def test_mediation_core_end_to_end(spark):
 
 def test_mediation_ko_branch(spark):
     from scio_db_spark.operators.keying import with_idempotent_key
-    from scio_db_spark.operators.validity import split_ok_ko
-    from scio_db_spark.streaming.mediation import validity_predicate
+    from scio_db_spark.operators.validity import is_valid_ber, split_ok_ko
 
     df = spark.createDataFrame(
         [
@@ -82,7 +81,7 @@ def test_mediation_ko_branch(spark):
         FLAT,
     )
     keyed = with_idempotent_key(df, "transaction_id", "customer_id")
-    ok, ko = split_ok_ko(keyed, validity_predicate())
+    ok, ko = split_ok_ko(keyed, is_valid_ber())
     assert [r.transaction_id for r in ok.collect()] == ["tx1"]
     assert {(r.transaction_id, r.notification_id) for r in ko.collect()} == {
         (None, "n2"),

@@ -381,7 +381,6 @@ DEDUP_IN = (
     "idempotent_key string, notification_id string, message string, "
     "customer_id string, ts double"
 )
-DEDUP_OUT = DEDUP_IN + ", send_status string"
 
 
 def _sink_over_ttl_dedup(spark, http_stub, analytics: bool) -> dict:
@@ -405,7 +404,7 @@ def _sink_over_ttl_dedup(spark, http_stub, analytics: bool) -> dict:
         )
         stream = spark.readStream.schema(DEDUP_IN).parquet(h.input_dir)
         deduped = ttl_dedup(
-            stream, ttl_seconds=3600, output_schema=DEDUP_OUT,
+            stream, ttl_seconds=3600,
             order_cols=["ts"], use_timers=False,
         )
         path = os.path.join(h.checkpoint_dir, "analytics")
@@ -506,7 +505,7 @@ def test_ttl_straddle_in_one_batch_sends_once(spark, http_stub, tmp_path):
         h.add_batch(rows, wait=False)
         stream = spark.readStream.schema(DEDUP_IN).parquet(h.input_dir)
         ttl_dedup(
-            stream, ttl_seconds=ttl_ms / 1000, output_schema=DEDUP_OUT,
+            stream, ttl_seconds=ttl_ms / 1000,
             clock_ms=clock_ms, use_timers=False,
         ).writeStream.foreachBatch(_process).outputMode("update").option(
             "checkpointLocation", h.checkpoint_dir

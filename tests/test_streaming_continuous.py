@@ -20,7 +20,6 @@ from pyspark.sql import Row
 from scio_db_spark.streaming.ttl_dedup import ttl_dedup
 
 SCHEMA = "idempotent_key string, payload string, ts double"
-OUT = SCHEMA + ", send_status string"
 
 
 def _drop_file(spark, input_dir, rows):
@@ -59,7 +58,7 @@ def test_timer_mode_ttl_expiry_continuous_query(spark):
         .parquet(input_dir)
     )
     deduped = ttl_dedup(
-        stream, ttl_seconds=ttl, output_schema=OUT, order_cols=["ts"],
+        stream, ttl_seconds=ttl, order_cols=["ts"],
         use_timers=True,  # production path: ProcessingTimeTimeout GC
     )
     query = (

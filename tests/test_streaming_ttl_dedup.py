@@ -1,12 +1,15 @@
-"""Streaming TTL-dedup contract tests (SURVEY.md §2.5 D2/D3/D4, §5).
+"""Streaming TTL-dedup contract tests (SURVEY.md §2.5 D2/D4, §5).
 
 The Spark analogue of MediationServiceSpec.scala:45-83: deterministic
 micro-batches through the file-drop harness, asserting
 
 - 3 duplicates -> 1 SENT + 2 SENT_OR_DUPLICATED (D4: emitted, not dropped);
 - a later batch inside the TTL -> SENT_OR_DUPLICATED;
-- after TTL expiry the key sends again (W5 timer-clear semantics);
-- initial-load rows seed state without being emitted (D3).
+- after TTL expiry the key sends again (W5 timer-clear semantics).
+
+Already-notified records (the reference's INITIAL_LOAD_ seed, D3) are
+suppressed upstream by the J1 historical anti-join; see
+test_mediation_pipeline.py.
 """
 
 from __future__ import annotations
@@ -16,7 +19,6 @@ import time
 import pytest
 from pyspark.sql import Row
 from pyspark.sql.types import (
-    BooleanType,
     DoubleType,
     StringType,
     StructField,
@@ -34,10 +36,6 @@ SCHEMA = StructType(
     ]
 )
 
-SEED_SCHEMA = StructType(SCHEMA.fields + [StructField("is_initial", BooleanType())])
-
-OUT = "idempotent_key string, payload string, ts double, send_status string"
-
 
 def _statuses(rows, key):
     return sorted(
@@ -54,7 +52,7 @@ def harness(spark):
 
 def test_three_duplicates_one_send(spark, harness):
     harness.start(
-        lambda s: ttl_dedup(s, ttl_seconds=3600, output_schema=OUT,
+        lambda s: ttl_dedup(s, ttl_seconds=3600,
                             order_cols=["ts"], use_timers=False)
     )
     harness.add_batch(
@@ -77,7 +75,7 @@ def test_three_duplicates_one_send(spark, harness):
 def test_duplicate_across_batches_then_ttl_expiry(spark, harness):
     ttl = 6.0
     harness.start(
-        lambda s: ttl_dedup(s, ttl_seconds=ttl, output_schema=OUT,
+        lambda s: ttl_dedup(s, ttl_seconds=ttl,
                             order_cols=["ts"], use_timers=False)
     )
     harness.add_batch([Row(idempotent_key="k", payload="a", ts=1.0)])
@@ -93,36 +91,6 @@ def test_duplicate_across_batches_then_ttl_expiry(spark, harness):
     assert _statuses(rows, "k")[-1] == (3.0, "SENT")
 
 
-def test_initial_load_seeds_state_without_emitting(spark):
-    h = StreamHarness(spark, SEED_SCHEMA)
-    try:
-        h.start(
-            lambda s: ttl_dedup(
-                s,
-                ttl_seconds=3600,
-                output_schema=OUT,
-                order_cols=["ts"],
-                initial_col="is_initial",
-                use_timers=False,
-            )
-        )
-        # Batch 1: historical seed (D3) — must NOT be emitted.
-        h.add_batch(
-            [Row(idempotent_key="h1", payload="hist", ts=0.0, is_initial=True)]
-        )
-        assert h.results() == []
-        # Batch 2: live traffic — seeded key is a duplicate, fresh key sends.
-        h.add_batch(
-            [
-                Row(idempotent_key="h1", payload="live", ts=1.0, is_initial=False),
-                Row(idempotent_key="new", payload="live", ts=1.0, is_initial=False),
-            ]
-        )
-        rows = h.results()
-        assert _statuses(rows, "h1") == [(1.0, "SENT_OR_DUPLICATED")]
-        assert _statuses(rows, "new") == [(1.0, "SENT")]
-    finally:
-        h.stop()
 
 
 def test_multichunk_key_sends_globally_first_row(spark):
@@ -134,7 +102,7 @@ def test_multichunk_key_sends_globally_first_row(spark):
         h = StreamHarness(spark, SCHEMA)
         h.start(
             lambda s: ttl_dedup(
-                s, ttl_seconds=3600, output_schema=OUT,
+                s, ttl_seconds=3600,
                 order_cols=["ts"], use_timers=False,
             )
         )
@@ -207,7 +175,7 @@ def test_hot_key_batch_is_bounded_and_correct(spark, harness):
     SENT_OR_DUPLICATED, all rows EMITTED (D4)."""
     n = 50_000
     harness.start(
-        lambda s: ttl_dedup(s, ttl_seconds=3600, output_schema=OUT,
+        lambda s: ttl_dedup(s, ttl_seconds=3600,
                             order_cols=["ts"], use_timers=False)
     )
     harness.add_batch(
@@ -245,7 +213,6 @@ def test_apply_ttl_gate_vectorized_hot_key_direct():
         first_sent=None,
         now=1_000,
         order_cols=["ts"],
-        initial_col=None,
     )
     assert first_sent == 1_000
     assert len(out) == n
@@ -254,33 +221,3 @@ def test_apply_ttl_gate_vectorized_hot_key_direct():
     assert counts["SENT_OR_DUPLICATED"] == n - 1
     assert out.iloc[0]["ts"] == 0  # SENT goes to the first-ordered row
     assert out.iloc[0]["send_status"] == "SENT"
-
-
-def test_null_initial_flag_is_not_a_seed():
-    """A NULL initial-load flag arrives as float NaN via Arrow→pandas;
-    it must mean 'live record' (SENT), not be truthy-swallowed into
-    the seed branch (which would drop the notification forever)."""
-    import pandas as pd
-
-    from scio_db_spark.streaming.ttl_dedup import _apply_ttl_gate
-
-    pdf = pd.DataFrame(
-        {
-            "idempotent_key": ["k1", "k1"],
-            "notification_id": ["n1", "n2"],
-            "is_initial": [float("nan"), 1.0],  # NULL flag + true seed
-        }
-    )
-    out, first_sent = _apply_ttl_gate(
-        [pdf],
-        first_sent=None,
-        now=1_000,
-        order_cols=["notification_id"],
-        initial_col="is_initial",
-    )
-    # the seed row set state but emitted nothing; the NULL-flag row is
-    # a live record — and since the seed seeded state, it must be
-    # marked duplicated rather than dropped or sent twice
-    assert out is not None and len(out) == 1
-    assert out.iloc[0]["notification_id"] == "n1"
-    assert first_sent == 1_000
