@@ -257,8 +257,7 @@ class SinkThrottleConfig:
     """Akka pool/throttle analogue (application.conf:22-31) — W11.
 
     Field names mirror the conf keys exactly (kebab→snake), so every
-    packaged value binds; ``max_concurrency`` is the derived knob the
-    HTTP sink consumes.
+    packaged value binds.
     """
 
     max_open_requests: int = 20000
@@ -269,10 +268,6 @@ class SinkThrottleConfig:
     throttle_requests: int = 1000
     throttle_per_second: int = 1
     throttle_burst: int = 1000
-
-    @property
-    def max_concurrency(self) -> int:
-        return self.max_open_requests
 
 
 @dataclass

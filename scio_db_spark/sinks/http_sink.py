@@ -10,9 +10,10 @@ swallowing ``http/state/StateBaseAsyncDoFn.java:118-135``, throttle
   in-flight request before the batch commits, which is exactly the
   ``@FinishBundle`` flush of the reference;
 - the send itself runs DISTRIBUTED via ``mapInPandas`` — each executor
-  posts its own partition with a bounded thread pool, so throughput
-  scales with executors instead of funneling through the driver;
-- per-worker token bucket + bounded pool ≈ Akka's
+  posts its own partition through its Python worker's sender pool, so
+  throughput scales with executors instead of funneling through the
+  driver;
+- per-worker token bucket + 32-thread pool ≈ Akka's
   ``throttle-requests``/``max-open-requests`` (W11). The budget is
   per PYTHON WORKER, and Spark forks one worker per concurrently
   running task — so the cluster-wide rate is
@@ -26,15 +27,18 @@ swallowing ``http/state/StateBaseAsyncDoFn.java:118-135``, throttle
 - latency stamping (P4): ``send_latency_ms`` per record
   (MyEventRecordUtils.scala:67-76).
 
-Clients are per-Python-worker singletons (module level), the Spark
-analogue of ``DoFnWithResource.PER_CLASS``
-(StateAsyncParDoWithHttpHandler.scala:48-50).
+The sender pool, each sender thread's keep-alive connection and the
+token buckets are per-Python-worker singletons (module level), the
+Spark analogue of ``DoFnWithResource.PER_CLASS``
+(StateAsyncParDoWithHttpHandler.scala:48-50): a reused Python worker
+keeps its sender threads and their connections across tasks and
+micro-batches.
 """
 
 from __future__ import annotations
 
+import functools
 import http.client
-import itertools
 import json
 import threading
 import time
@@ -56,6 +60,14 @@ RESPONSE_FIELDS = (
 )
 
 _KO_BODY = "ko"  # koNotificationResponse, MyHttpResponse.scala:13-14
+
+# Fixed send settings (application.conf:22-31 analogues): sender
+# threads per Python worker, the connect/read deadline of each request
+# (``initial-timeout``) and the token bucket capacity
+# (``throttle-burst``).
+_SENDER_THREADS = 32
+_INITIAL_TIMEOUT_S = 30.0
+_BURST = 1000.0
 
 
 class _HttpStatusError(OSError):
@@ -92,16 +104,23 @@ class TokenBucket:
             time.sleep(wait)
 
 
-_buckets: dict[tuple, TokenBucket] = {}
+_buckets: dict[float, TokenBucket] = {}
 _buckets_lock = threading.Lock()
 
 
-def _bucket_for(rate: float, burst: float | None) -> TokenBucket:
-    key = (rate, burst)
+def _bucket_for(rate: float) -> TokenBucket:
     with _buckets_lock:
-        if key not in _buckets:
-            _buckets[key] = TokenBucket(rate, burst)
-        return _buckets[key]
+        if rate not in _buckets:
+            _buckets[rate] = TokenBucket(rate, _BURST)
+        return _buckets[rate]
+
+
+@functools.cache
+def _sender_pool() -> ThreadPoolExecutor:
+    """This Python worker's sender pool, made by its first send (a
+    module function: the partition closure is pickled by value, and
+    with it any pool object it named)."""
+    return ThreadPoolExecutor(max_workers=_SENDER_THREADS)
 
 
 def _as_int(v) -> int | None:
@@ -139,13 +158,11 @@ def classify_success(body: str | None) -> bool:
 _tl = threading.local()
 
 
-def _get_conn(scheme: str, netloc: str, timeout: float):
+def _get_conn(scheme: str, netloc: str):
     conns = getattr(_tl, "conns", None)
     if conns is None:
         conns = _tl.conns = {}
-    # timeout is part of the key: a pooled connection created under one
-    # deadline must not silently serve a later call's tighter deadline.
-    key = (scheme, netloc, timeout)
+    key = (scheme, netloc)
     conn = conns.get(key)
     if conn is None:
         cls = (
@@ -153,14 +170,14 @@ def _get_conn(scheme: str, netloc: str, timeout: float):
             if scheme == "https"
             else http.client.HTTPConnection
         )
-        conn = cls(netloc, timeout=timeout)
+        conn = cls(netloc, timeout=_INITIAL_TIMEOUT_S)
         conns[key] = conn
     return conn
 
 
-def _drop_conn(scheme: str, netloc: str, timeout: float) -> None:
+def _drop_conn(scheme: str, netloc: str) -> None:
     conns = getattr(_tl, "conns", {})
-    conn = conns.pop((scheme, netloc, timeout), None)
+    conn = conns.pop((scheme, netloc), None)
     if conn is not None:
         try:
             conn.close()
@@ -168,7 +185,7 @@ def _drop_conn(scheme: str, netloc: str, timeout: float) -> None:
             pass
 
 
-def _post_once(url: str, payload: dict, timeout: float) -> dict:
+def _post_once(url: str, payload: dict) -> dict:
     parts = urllib.parse.urlsplit(url)
     path = parts.path or "/"
     if parts.query:
@@ -176,7 +193,7 @@ def _post_once(url: str, payload: dict, timeout: float) -> dict:
     data = json.dumps(payload).encode("utf-8")
     headers = {"Content-Type": "application/json"}
     def _attempt():
-        conn = _get_conn(parts.scheme, parts.netloc, timeout)
+        conn = _get_conn(parts.scheme, parts.netloc)
         conn.request("POST", path, body=data, headers=headers)
         resp = conn.getresponse()
         body = resp.read().decode("utf-8", errors="replace")
@@ -195,7 +212,7 @@ def _post_once(url: str, payload: dict, timeout: float) -> dict:
         # from a stale keep-alive the server closed between requests:
         # drop the pooled connection and re-attempt once on a fresh one;
         # failures of the fresh attempt propagate to send_one's retry.
-        _drop_conn(parts.scheme, parts.netloc, timeout)
+        _drop_conn(parts.scheme, parts.netloc)
         raw = _attempt()
     try:
         parsed = json.loads(raw)
@@ -216,7 +233,6 @@ def send_one(
     payload: dict,
     retries: int = 3,
     backoff_s: float = 10.0,
-    timeout: float = 30.0,
 ) -> tuple[dict, int]:
     """W8/W9: POST with fixed-backoff retry; KO response on exhaustion.
 
@@ -225,7 +241,7 @@ def send_one(
     attempt = 0
     while True:
         try:
-            return _post_once(url, payload, timeout), attempt
+            return _post_once(url, payload), attempt
         except Exception:  # noqa: BLE001 — W9: keep the stream alive
             attempt += 1
             if attempt > retries:
@@ -241,33 +257,25 @@ def send_one(
             time.sleep(backoff_s)
 
 
-def to_http_request(
-    df: DataFrame,
-    title_col: str = "notification_id",
-    body_col: str = "message",
-    user_id_col: str = "customer_id",
-) -> DataFrame:
+def to_http_request(df: DataFrame) -> DataFrame:
     """P7: project the HTTP request DTO
     (NotificationFactory.scala:8-13 — title=notification.id,
     body=message, userId=int(customer.id))."""
     return df.withColumns(
         {
-            "title": F.col(title_col).cast("string"),
-            "body": F.col(body_col).cast("string"),
-            "user_id": F.col(user_id_col).cast("int"),
+            "title": F.col("notification_id").cast("string"),
+            "body": F.col("message").cast("string"),
+            "user_id": F.col("customer_id").cast("int"),
         }
     )
 
 
 def send_http_batch(
     batch_df: DataFrame,
-    url: str | list[str],
-    max_concurrency: int = 32,
+    url: str,
     throttle_rps: float | None = 1000.0,
-    throttle_burst: float | None = 1000.0,
     retries: int = 3,
     backoff_s: float = 10.0,
-    timeout: float = 30.0,
 ) -> DataFrame:
     """K4: post every row (expects ``title``/``body``/``user_id`` cols,
     see :func:`to_http_request`), appending the response columns.
@@ -277,15 +285,11 @@ def send_http_batch(
     StateAsyncParDoWithHttpHandler.scala:155-164), in the same pass
     that POSTs the rest, so a ``ttl_dedup`` batch is read once.
 
-    Distributed: each executor partition sends through its own bounded
-    thread pool + token bucket. The returned DataFrame is lazy; the
+    Distributed: each executor partition sends through its Python
+    worker's sender pool + token bucket, and every row's response is in
+    before the partition yields it. The returned DataFrame is lazy; the
     caller's write/collect action inside ``foreachBatch`` is the bundle
     flush.
-
-    ``url`` may be a LIST of equivalent endpoints (a sharded receiver
-    tier / LB bypass): rows round-robin across them per partition, so
-    at 100 TB no single endpoint sees the full stream. Keep-alive
-    pooling is per (thread, endpoint) either way.
     """
     # Input columns named like a response column (e.g. a BER-flat
     # stream's pre-send nhub_success placeholder) must be DROPPED, not
@@ -302,13 +306,8 @@ def send_http_batch(
     out_schema = f"{out_schema}, {RESPONSE_FIELDS}"
 
     def _send_partition(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bucket = (
-            _bucket_for(throttle_rps, throttle_burst) if throttle_rps else None
-        )
-        pool = ThreadPoolExecutor(max_workers=max_concurrency)
-
-        urls = [url] if isinstance(url, str) else list(url)
-        rr = itertools.count()
+        bucket = _bucket_for(throttle_rps) if throttle_rps else None
+        pool = _sender_pool()
 
         def _send_row(row) -> tuple:
             user_id = None if pd.isna(row.user_id) else int(row.user_id)
@@ -326,8 +325,7 @@ def send_http_batch(
             t0 = time.time()
             payload = {"title": row.title, "body": row.body, "userId": user_id}
             resp, _attempts = send_one(
-                urls[next(rr) % len(urls)], payload, retries=retries,
-                backoff_s=backoff_s, timeout=timeout,
+                url, payload, retries=retries, backoff_s=backoff_s
             )
             latency_ms = int((time.time() - t0) * 1000)
             body = resp.get("body")
@@ -348,25 +346,22 @@ def send_http_batch(
                 latency_ms,
             )
 
-        try:
-            for pdf in pdfs:
-                if not len(pdf):
-                    continue
-                results = list(pool.map(_send_row, pdf.itertuples(index=False)))
-                out = pdf.copy()
-                out[
-                    [
-                        "resp_id",
-                        "resp_title",
-                        "resp_body",
-                        "resp_user_id",
-                        "nhub_success",
-                        "send_latency_ms",
-                    ]
-                ] = pd.DataFrame(results, index=pdf.index)
-                yield out
-        finally:
-            pool.shutdown(wait=True)
+        for pdf in pdfs:
+            if not len(pdf):
+                continue
+            results = list(pool.map(_send_row, pdf.itertuples(index=False)))
+            out = pdf.copy()
+            out[
+                [
+                    "resp_id",
+                    "resp_title",
+                    "resp_body",
+                    "resp_user_id",
+                    "nhub_success",
+                    "send_latency_ms",
+                ]
+            ] = pd.DataFrame(results, index=pdf.index)
+            yield out
 
     return batch_df.mapInPandas(_send_partition, out_schema)
 

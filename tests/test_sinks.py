@@ -48,6 +48,11 @@ class _StubHandler(BaseHTTPRequestHandler):
         self.send_header("Content-Length", str(len(data)))
         self.end_headers()
         self.wfile.write(data)
+        if self.server.close_when_idle:
+            # An endpoint that closes idle keep-alive connections: the
+            # socket closes after the response, with no
+            # ``Connection: close`` header to warn the client.
+            self.close_connection = True
 
     def log_message(self, *args):  # silence
         pass
@@ -59,6 +64,7 @@ def http_stub():
     server.requests = []
     server.fail_all = False
     server.weird_mode = False
+    server.close_when_idle = False
     t = threading.Thread(target=server.serve_forever, daemon=True)
     t.start()
     yield server
@@ -332,37 +338,33 @@ def test_as_int_rejects_out_of_int32_values():
     assert _as_int("nope") is None
 
 
-def test_send_http_batch_shards_across_url_list(spark):
-    """A LIST of endpoint URLs round-robins per partition: every row
-    succeeds and BOTH receivers see traffic (a sharded receiver
-    tier)."""
-    servers = []
-    for _ in range(2):
-        s = ThreadingHTTPServer(("127.0.0.1", 0), _StubHandler)
-        s.requests = []
-        s.fail_all = False
-        s.weird_mode = False
-        threading.Thread(target=s.serve_forever, daemon=True).start()
-        servers.append(s)
-    urls = [
-        f"http://127.0.0.1:{s.server_address[1]}/posts" for s in servers
-    ]
-    from scio_db_spark.sinks.http_sink import send_http_batch, to_http_request
+def test_send_one_reconnects_after_endpoint_closed_idle_connection(
+    http_stub, monkeypatch
+):
+    """A sender thread's keep-alive connection outlives the micro-batch,
+    so the endpoint may have closed it by the next POST. The stale
+    connection is dropped and the POST goes out once on a fresh one,
+    without spending a retry."""
+    from scio_db_spark.sinks import http_sink
 
-    df = spark.createDataFrame(
-        [Row(notification_id=f"n{i}", message="m", customer_id=i)
-         for i in range(8)]
-    ).coalesce(1)  # one partition => strict round-robin across urls
-    out = send_http_batch(
-        to_http_request(df), urls, throttle_rps=None, retries=2,
-        backoff_s=0.01,
-    ).collect()
-    for s in servers:
-        s.shutdown()
-    assert len(out) == 8
-    assert all(r.resp_id == 101 for r in out)
-    counts = [len(s.requests) for s in servers]
-    assert counts == [4, 4], counts
+    drops = []
+    drop_conn = http_sink._drop_conn
+
+    def counting_drop(*key):
+        drops.append(key)
+        drop_conn(*key)
+
+    monkeypatch.setattr(http_sink, "_drop_conn", counting_drop)
+    http_stub.close_when_idle = True
+    for i in range(2):
+        resp, attempts = http_sink.send_one(
+            _url(http_stub), {"title": f"n{i}", "body": "m", "userId": i},
+            retries=0, backoff_s=0.0,
+        )
+        assert attempts == 0 and resp["id"] == 101
+        assert http_sink.classify_success(resp["body"])
+    assert [req["title"] for req in http_stub.requests] == ["n0", "n1"]
+    assert len(drops) == 1  # the second call found its connection closed
 
 
 def test_release_session_memory_unpersists_and_reports(spark):
