@@ -50,9 +50,9 @@ def validity_metrics(valid_col: str = "is_valid") -> dict[str, Column]:
     the reconciliation these metrics exist for.
     """
     ok = F.coalesce(F.col(valid_col), F.lit(False))
-    # coalesce(..., 0): sum() over an EMPTY micro-batch (e.g. a pure
-    # timer-check batch) is NULL, which would break the invariant on
-    # every idle tick.
+    # coalesce(..., 0): sum() over an EMPTY micro-batch (e.g. the
+    # no-data batch after a watermark move) is NULL, which would break
+    # the invariant on every such batch.
     return {
         "n_total": F.count(F.lit(1)),
         "n_ok": F.coalesce(F.sum(F.when(ok, 1).otherwise(0)), F.lit(0)),

@@ -48,8 +48,9 @@ def _stage_one_file(spark, rows, schema, input_dir: str) -> None:
 
 def _run_available_now(
     out: DataFrame, output_mode: str, checkpoint_dir: str, collected: list
-) -> None:
-    """One Trigger.AvailableNow pass of ``out`` into ``collected``."""
+) -> list:
+    """One Trigger.AvailableNow pass of ``out`` into ``collected``;
+    returns the pass's ``recentProgress``."""
 
     def _sink(batch_df: DataFrame, _epoch: int) -> None:
         collected.extend(batch_df.collect())
@@ -62,7 +63,7 @@ def _run_available_now(
         .start()
     )
     query.awaitTermination()
-
+    return query.recentProgress
 
 
 class StreamHarness:
@@ -96,23 +97,24 @@ class StreamHarness:
         self._transform = transform
         self._output_mode = output_mode
 
-    def _run_pass(self) -> None:
+    def _run_pass(self) -> list:
         stream = (
             self.spark.readStream.schema(self.schema)
             .option("maxFilesPerTrigger", "1")  # one file = one micro-batch
             .parquet(self.input_dir)
         )
-        _run_available_now(
+        return _run_available_now(
             self._transform(stream),
             self._output_mode,
             self.checkpoint_dir,
             self._collected,
         )
 
-    def add_batch(self, rows: list, wait: bool = True) -> None:
+    def add_batch(self, rows: list, wait: bool = True) -> list | None:
+        """Stage ``rows`` as one file; with ``wait``, run a pass over it
+        and return that pass's ``recentProgress``."""
         _stage_one_file(self.spark, rows, self.schema, self.input_dir)
-        if wait:
-            self._run_pass()
+        return self._run_pass() if wait else None
 
     def process_pending(self) -> None:
         """Run one available-now pass without adding data (fires due timers)."""

@@ -48,7 +48,6 @@ def build_mediation_core(
     historical_df: DataFrame | None = None,
     ttl_seconds: float = 259200.0,
     order_cols: list[str] | None = None,
-    use_timers: bool = True,
 ) -> dict[str, DataFrame]:
     """Build the OK / KO / deduped streaming plans (no sinks attached).
 
@@ -92,12 +91,7 @@ def build_mediation_core(
         hist_keys.count()
         ok = ok.join(hist_keys, "idempotent_key", "left_anti")
 
-    deduped = ttl_dedup(
-        ok,
-        ttl_seconds=ttl_seconds,
-        order_cols=order_cols,
-        use_timers=use_timers,
-    )
+    deduped = ttl_dedup(ok, ttl_seconds=ttl_seconds, order_cols=order_cols)
     return {"ko": ko, "deduped": deduped}
 
 
@@ -132,11 +126,10 @@ def run_mediation_pipeline(
 ) -> dict:
     """Start the full pipeline; returns the running queries.
 
-    Both queries run under ``trigger``. Armed per-key timers keep
-    ``Trigger.AvailableNow`` runs scheduling timer-check batches
-    forever, so bounded runs use the inline-expiry TTL form (identical
-    observable semantics — see ``ttl_dedup``); continuous runs keep
-    background timer GC.
+    Both queries run under ``trigger``. The TTL gate removes expired
+    keys the same way under every trigger (see ``ttl_dedup``), so an
+    ``availableNow`` run ends and a continuous one goes idle when its
+    input does.
     """
     from scio_db_spark.sinks.files import dead_letter_sink
 
@@ -145,7 +138,6 @@ def run_mediation_pipeline(
         historical_df=historical_df,
         ttl_seconds=ttl_seconds,
         order_cols=order_cols,
-        use_timers=not (trigger or {}).get("availableNow", False),
     )
 
     ko_query = dead_letter_sink(

@@ -3,7 +3,7 @@
 Re-expresses the reference's State & Timer pattern
 (``/root/reference/src/main/scala/com.db.myproject/mediation/http/state/StateBaseAsyncDoFn.java:30-34,68-93,156-166``
 and ``http/StateAsyncParDoWithHttpHandler.scala:86-95,105-164``) on
-``applyInPandasWithState`` with a processing-time timeout:
+``applyInPandasWithState`` with an event-time timeout on a batch clock:
 
 - first occurrence of a key → emitted ``SENT`` and the send time is
   recorded in per-key state (Beam's ``BagState`` buffered the record,
@@ -25,14 +25,21 @@ anti-join against the historical key set does that upstream of this
 gate (``build_mediation_core``), so the gate's state holds live sends
 only.
 
-One state implementation, ``applyInPandasWithState`` (SURVEY.md §2.5):
-Beam's explicit per-key timer is not needed for the contract, because
-the deadline is re-derived from the stored first-send time on every
-visit; the processing-time timeout only garbage-collects expired keys.
+One state implementation, ``applyInPandasWithState`` (SURVEY.md §2.5),
+and one clean-up for every trigger. The contract needs no per-key timer:
+the deadline is re-derived from the first-send time on every visit, and
+clean-up only bounds state. It runs on a batch clock: the input is
+stamped with the micro-batch time (``__batch_ts``) under a watermark
+delayed by ``min(TTL, 1 hour)``, and each live key times out at the
+batch time plus what is left of its TTL. The delay keeps rows above the
+watermark when the wall clock steps back; a row below it would be
+dropped as late, a lost notification. Keys are removed in data batches
+and in the one trailing batch Spark runs after the watermark moves, so
+a query goes idle when its input does.
 
 Scale: state is hash-partitioned by key across executors in the
 RocksDB state store — ~1M live keys (BASELINE.md) fits comfortably,
-and the TTL timeout bounds state growth.
+and clean-up bounds state to the keys sent within TTL plus delay.
 """
 
 from __future__ import annotations
@@ -44,6 +51,7 @@ from typing import Any
 import pandas as pd
 
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from scio_db_spark.operators.keying import KEY_COL
@@ -52,6 +60,8 @@ from scio_db_spark.schemas import SENT_OR_DUPLICATED
 SENT = "SENT"
 
 _STATE_SCHEMA = "first_sent_ms long"
+_BATCH_TS = "__batch_ts"
+_MAX_DELAY_MS = 3_600_000
 
 
 def _apply_ttl_gate(
@@ -101,27 +111,22 @@ def _apply_ttl_gate(
     return out, first_sent
 
 
-def _make_dedup_fn(
-    ttl_ms: int,
-    order_cols: list[str] | None,
-    clock_ms=None,
-    use_timers: bool = True,
-):
+def _make_dedup_fn(ttl_ms: int, order_cols: list[str] | None, clock_ms=None):
     clock_ms = clock_ms or (lambda: int(time.time() * 1000))
 
     def dedup_fn(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
         if state.hasTimedOut:
-            # W5/onTtl: the timer fired — clear the key's state so the
-            # next occurrence sends again (StateBaseAsyncDoFn.java:156-166).
+            # W5/onTtl: the watermark passed the key's deadline — clear
+            # its state (StateBaseAsyncDoFn.java:156-166).
             state.remove()
             return
         now = clock_ms()
         first_sent = state.get[0] if state.exists else None
         if first_sent is not None and now - first_sent >= ttl_ms:
-            # Deadline passed but the timeout callback hasn't run yet
-            # (timeouts reset on every invocation) — expire inline.
+            # Deadline passed but the watermark has not reached it yet
+            # (a key with data is never timed out) — expire inline.
             first_sent = None
         chunks = [pdf for pdf in pdfs if len(pdf)]
         out, first_sent = _apply_ttl_gate(chunks, first_sent, now, order_cols)
@@ -129,11 +134,12 @@ def _make_dedup_fn(
             yield out
         if first_sent is not None:
             state.update((int(first_sent),))
-            if use_timers:
-                # Re-arm the per-key timer relative to the FIRST send so
-                # duplicates never extend the TTL.
-                remaining = max(1, first_sent + ttl_ms - now)
-                state.setTimeoutDuration(int(remaining))
+            # Re-arm relative to the FIRST send so duplicates never
+            # extend the TTL.
+            remaining = max(1, first_sent + ttl_ms - now)
+            state.setTimeoutTimestamp(
+                state.getCurrentProcessingTimeMs() + int(remaining)
+            )
 
     return dedup_fn
 
@@ -143,39 +149,33 @@ def ttl_dedup(
     ttl_seconds: float,
     order_cols: list[str] | None = None,
     clock_ms=None,
-    use_timers: bool = True,
 ) -> DataFrame:
     """Apply the TTL dedup gate to a streaming DataFrame keyed by
     ``idempotent_key``; the output is in update mode.
 
     The output is the input columns (every field nullable) plus
     ``send_status string``. ``clock_ms`` is injectable for
-    deterministic tests (virtual clock).
-
-    ``use_timers=True`` (production, continuous queries) arms a
-    per-key processing-time timer that garbage-collects expired state
-    (Beam's ``@OnTimer`` clear). Armed timers make Spark schedule
-    timer-check micro-batches, which keeps ``Trigger.AvailableNow``
-    queries alive — so bounded/test harnesses pass ``use_timers=False``:
-    TTL expiry is *also* enforced inline from the stored first-send
-    time, so observable SENT / SENT_OR_DUPLICATED semantics are
-    identical; only the state-GC mechanism differs (inline removal on
-    the key's next visit instead of a background timer).
+    deterministic tests (virtual clock); it decides expiry, while state
+    clean-up runs on the batch clock, under every trigger (see the
+    module docstring): an ``availableNow`` pass ends after its trailing
+    batch, and a continuous query goes idle with its input.
     """
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if use_timers
-        else GroupStateTimeout.NoTimeout
+    ttl_ms = int(ttl_seconds * 1000)
+    stamped = keyed_df.withColumn(_BATCH_TS, F.current_timestamp())
+    stamped = stamped.withWatermark(
+        _BATCH_TS, f"{min(ttl_ms, _MAX_DELAY_MS)} milliseconds"
     )
     out_cols = [
-        f"{f.name} {f.dataType.simpleString()}" for f in keyed_df.schema.fields
+        f"{f.name} {f.dataType.simpleString()}" for f in stamped.schema.fields
     ]
-    return keyed_df.groupBy(KEY_COL).applyInPandasWithState(
-        func=_make_dedup_fn(
-            int(ttl_seconds * 1000), order_cols, clock_ms, use_timers
-        ),
-        outputStructType=", ".join(out_cols) + ", send_status string",
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=timeout,
+    return (
+        stamped.groupBy(KEY_COL)
+        .applyInPandasWithState(
+            func=_make_dedup_fn(ttl_ms, order_cols, clock_ms),
+            outputStructType=", ".join(out_cols) + ", send_status string",
+            stateStructType=_STATE_SCHEMA,
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.EventTimeTimeout,
+        )
+        .drop(_BATCH_TS)
     )

@@ -57,21 +57,26 @@ def _start_stub():
     return server, f"http://127.0.0.1:{server.server_address[1]}/posts"
 
 
-def _start_pipeline(spark, url, root, **kwargs) -> dict:
-    """Drop one file (two copies of tx1, one invalid row, tx3) into
-    ``<root>/in`` and start ``run_mediation_pipeline`` over it."""
+def _rows():
+    """Two copies of tx1, one invalid row and tx3."""
     import datetime
 
-    input_dir = os.path.join(root, "in")
-    os.makedirs(input_dir)
     et = datetime.datetime(2024, 1, 1, 0, 0, 0)
-    rows = [
+    return [
         Row("tx1", "n1", "1", "m", et, 1.0),
         Row("tx1", "n1", "1", "m", et, 2.0),   # in-batch duplicate
         Row(None, "n2", "2", "m", et, 1.0),    # invalid -> dead letter
         Row("tx3", "n3", "3", "m", et, 1.0),
     ]
-    df = spark.createDataFrame(rows, FLAT)
+
+
+def _start_pipeline(spark, url, root, rows=None, **kwargs) -> dict:
+    """Drop ``rows`` (default ``_rows()``) as one file into ``<root>/in``
+    and start ``run_mediation_pipeline`` over that directory; a second
+    call on the same ``root`` restarts on the same checkpoints."""
+    input_dir = os.path.join(root, "in")
+    os.makedirs(input_dir, exist_ok=True)
+    df = spark.createDataFrame(rows or _rows(), FLAT)
     staging = tempfile.mkdtemp()
     df.coalesce(1).write.mode("overwrite").parquet(staging)
     part = next(
@@ -165,6 +170,87 @@ def test_available_now_trigger_ends_both_queries(spark):
         assert len(server.requests) == 2
         toxic = spark.read.parquet(os.path.join(root, "dead", "toxic"))
         assert [r.notification_id for r in toxic.collect()] == ["n2"]
+    finally:
+        for q in queries.values():
+            q.stop()
+        server.shutdown()
+
+
+@pytest.mark.slow
+def test_continuous_pipeline_goes_idle_without_input(spark):
+    """With no input the send query runs no timer loop: after the data
+    batch it runs at most the TTL gate's one trailing batch, so its
+    batch id advances by at most 2 over 10 s (an idle progress report
+    carries the next batch's id)."""
+    server, url = _start_stub()
+    root = tempfile.mkdtemp(prefix="med_e2e_idle_")
+    queries = _start_pipeline(spark, url, root)
+    send = queries["send_query"]
+    try:
+        assert _wait_until(lambda: len(server.requests) >= 2)
+        assert _wait_until(lambda: send.lastProgress is not None)
+        before = send.lastProgress["batchId"]
+        time.sleep(10)
+        after = send.lastProgress["batchId"]
+        assert after - before <= 2, (before, after)
+        assert send.isActive and send.exception() is None
+        assert len(server.requests) == 2
+    finally:
+        for q in queries.values():
+            q.stop()
+        server.shutdown()
+
+
+@pytest.mark.slow
+def test_checkpoint_survives_switch_from_available_now_to_continuous(spark):
+    """A checkpoint written by an ``availableNow`` run restarts under
+    the default trigger: the TTL gate keeps one state layout under
+    every trigger. The restarted leg sees a copy of tx1, which state
+    still holds, and a new tx7."""
+    import datetime
+
+    server, url = _start_stub()
+    root = tempfile.mkdtemp(prefix="med_e2e_switch_")
+    analytics = os.path.join(root, "analytics")
+    queries = _start_pipeline(
+        spark, url, root, trigger={"availableNow": True}
+    )
+    try:
+        for name, q in queries.items():
+            assert q.awaitTermination(60), f"{name} still running"
+            assert q.exception() is None, name
+        assert len(server.requests) == 2
+
+        et = datetime.datetime(2024, 1, 1, 0, 0, 0)
+        queries = _start_pipeline(
+            spark, url, root,
+            rows=[
+                Row("tx1", "n1", "1", "m", et, 3.0),
+                Row("tx7", "n7", "7", "m", et, 1.0),
+            ],
+        )
+
+        send = queries["send_query"]
+
+        def _leg2_done():
+            try:
+                return sum(_status_counts(spark, analytics).values()) >= 5
+            except Exception:  # noqa: BLE001 — a file being written
+                return False
+
+        assert _wait_until(lambda: not send.isActive or _leg2_done())
+        assert send.isActive, send.exception()
+        assert _leg2_done(), "leg 2 analytics missing"
+        assert sorted(r["title"] for r in server.requests) == [
+            "n1", "n3", "n7"
+        ]
+        dup = spark.read.parquet(analytics).where(
+            "transaction_id = 'tx1' AND ts = 3.0"
+        ).collect()
+        assert [r.send_status for r in dup] == ["SENT_OR_DUPLICATED"]
+        assert _status_counts(spark, analytics) == {
+            "SENT": 3, "SENT_OR_DUPLICATED": 2
+        }
     finally:
         for q in queries.values():
             q.stop()

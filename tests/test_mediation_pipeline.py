@@ -37,7 +37,6 @@ def test_mediation_core_end_to_end(spark):
     h.start(
         lambda s: build_mediation_core(
             s, historical_df=hist, ttl_seconds=3600, order_cols=["ts"],
-            use_timers=False,
         )["deduped"]
     )
     h.add_batch(
@@ -112,7 +111,7 @@ def test_historical_set_is_read_once_at_build(spark, tmp_path):
     h = StreamHarness(spark, FLAT)
     h.start(
         lambda s: build_mediation_core(
-            s, historical_df=hist, ttl_seconds=3600, use_timers=False,
+            s, historical_df=hist, ttl_seconds=3600,
         )["deduped"]
     )
     try:
@@ -144,7 +143,7 @@ def test_rebuild_over_changed_historical_dir_drops_new_key(
     h.start(
         lambda s: build_mediation_core(
             s, historical_df=spark.read.parquet(str(hist_dir)),
-            ttl_seconds=3600, use_timers=False,
+            ttl_seconds=3600,
         )["deduped"]
     )
     try:
@@ -187,7 +186,7 @@ def test_size_statistics_pick_the_historical_join(spark, tmp_path, threshold):
         stream = spark.readStream.schema(FLAT).parquet(h.input_dir)
         deduped = build_mediation_core(
             stream, historical_df=spark.read.parquet(str(hist_dir)),
-            ttl_seconds=3600, use_timers=False,
+            ttl_seconds=3600,
         )["deduped"]
         query = (
             deduped.writeStream.foreachBatch(

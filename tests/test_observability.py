@@ -73,9 +73,7 @@ def test_mediation_gate_metrics_ride_the_pipeline(spark, tmp_path):
         "transaction_id string, notification_id string, "
         "customer_id string, message string, ts double"
     ).parquet(src)
-    core = build_mediation_core(
-        stream, ttl_seconds=3600, use_timers=False
-    )
+    core = build_mediation_core(stream, ttl_seconds=3600)
     q = (
         core["ko"].writeStream.format("noop")
         .option("checkpointLocation", str(tmp_path / "ck"))

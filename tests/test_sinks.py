@@ -405,10 +405,7 @@ def _sink_over_ttl_dedup(spark, http_stub, analytics: bool) -> dict:
             wait=False,
         )
         stream = spark.readStream.schema(DEDUP_IN).parquet(h.input_dir)
-        deduped = ttl_dedup(
-            stream, ttl_seconds=3600,
-            order_cols=["ts"], use_timers=False,
-        )
+        deduped = ttl_dedup(stream, ttl_seconds=3600, order_cols=["ts"])
         path = os.path.join(h.checkpoint_dir, "analytics")
         http_notification_sink(
             to_http_request(deduped), _url(http_stub),
@@ -507,8 +504,7 @@ def test_ttl_straddle_in_one_batch_sends_once(spark, http_stub, tmp_path):
         h.add_batch(rows, wait=False)
         stream = spark.readStream.schema(DEDUP_IN).parquet(h.input_dir)
         ttl_dedup(
-            stream, ttl_seconds=ttl_ms / 1000,
-            clock_ms=clock_ms, use_timers=False,
+            stream, ttl_seconds=ttl_ms / 1000, clock_ms=clock_ms
         ).writeStream.foreachBatch(_process).outputMode("update").option(
             "checkpointLocation", h.checkpoint_dir
         ).trigger(availableNow=True).start().awaitTermination()

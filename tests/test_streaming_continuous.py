@@ -1,10 +1,10 @@
-"""Continuous-query streaming tests: the production (timer-armed) TTL
-dedup path (W5) and streaming dropDuplicates (D1 streaming form).
+"""Continuous-query streaming tests: TTL dedup state clean-up (W5) in a
+long-running query, and streaming dropDuplicates (D1 streaming form).
 
-The bounded harness can't cover ``use_timers=True`` (armed timers keep
-an AvailableNow query alive — see streaming/ttl_dedup.py), so this
-test runs a REAL continuous micro-batch query, waits on observed
-output, and asserts the timer cleared state after the TTL.
+The TTL test runs a REAL continuous micro-batch query, waits on
+observed output, and reads the state operator's progress: after TTL
+plus the watermark delay, the batch-clock timeout removes the expired
+key once new input moves the watermark (see streaming/ttl_dedup.py).
 """
 
 from __future__ import annotations
@@ -46,7 +46,7 @@ def _wait_until(pred, timeout=60.0, step=0.5):
 
 
 @pytest.mark.slow
-def test_timer_mode_ttl_expiry_continuous_query(spark):
+def test_ttl_expiry_removes_state_in_continuous_query(spark):
     input_dir = tempfile.mkdtemp(prefix="cq_in_")
     ck = tempfile.mkdtemp(prefix="cq_ck_")
     collected: list = []
@@ -57,10 +57,7 @@ def test_timer_mode_ttl_expiry_continuous_query(spark):
         .option("maxFilesPerTrigger", "1")
         .parquet(input_dir)
     )
-    deduped = ttl_dedup(
-        stream, ttl_seconds=ttl, order_cols=["ts"],
-        use_timers=True,  # production path: ProcessingTimeTimeout GC
-    )
+    deduped = ttl_dedup(stream, ttl_seconds=ttl, order_cols=["ts"])
     query = (
         deduped.writeStream.foreachBatch(
             lambda b, _e: collected.extend(b.collect())
@@ -69,6 +66,14 @@ def test_timer_mode_ttl_expiry_continuous_query(spark):
         .option("checkpointLocation", ck)
         .start()
     )
+
+    def state_ops():
+        return [
+            p["stateOperators"][0]
+            for p in query.recentProgress
+            if p["stateOperators"]  # none before the first batch
+        ]
+
     try:
         _drop_file(spark, input_dir, [Row("k1", "a", 1.0)])
         assert _wait_until(lambda: len(collected) >= 1)
@@ -79,13 +84,23 @@ def test_timer_mode_ttl_expiry_continuous_query(spark):
         assert _wait_until(lambda: len(collected) >= 2)
         assert collected[1].send_status == "SENT_OR_DUPLICATED"
 
-        # Sleep past the TTL; the processing-time timer fires in a
-        # timer-check micro-batch and clears k1's state
-        # (StateBaseAsyncDoFn.java:156-166). The key then sends again.
-        time.sleep(ttl + 3)
-        _drop_file(spark, input_dir, [Row("k1", "c", 3.0)])
+        # Sleep past TTL + delay (min(TTL, 1 hour)). A new key moves the
+        # watermark past k1's deadline, and the batch after it removes
+        # k1's state (StateBaseAsyncDoFn.java:156-166).
+        time.sleep(2 * ttl + 2)
+        _drop_file(spark, input_dir, [Row("k2", "c", 3.0)])
         assert _wait_until(lambda: len(collected) >= 3)
         assert collected[2].send_status == "SENT"
+        assert _wait_until(
+            lambda: sum(op["numRowsRemoved"] for op in state_ops()) >= 1
+            and state_ops()[-1]["numRowsTotal"] == 1
+        ), state_ops()
+
+        # The key sends again.
+        _drop_file(spark, input_dir, [Row("k1", "d", 4.0)])
+        assert _wait_until(lambda: len(collected) >= 4)
+        assert collected[3].send_status == "SENT"
+        assert all(op["numRowsDroppedByWatermark"] == 0 for op in state_ops())
     finally:
         query.stop()
 

@@ -5,7 +5,8 @@ micro-batches through the file-drop harness, asserting
 
 - 3 duplicates -> 1 SENT + 2 SENT_OR_DUPLICATED (D4: emitted, not dropped);
 - a later batch inside the TTL -> SENT_OR_DUPLICATED;
-- after TTL expiry the key sends again (W5 timer-clear semantics).
+- after TTL expiry the key sends again, and its state is removed under
+  an ``availableNow`` trigger too (W5 timer-clear semantics).
 
 Already-notified records (the reference's INITIAL_LOAD_ seed, D3) are
 suppressed upstream by the J1 historical anti-join; see
@@ -52,8 +53,7 @@ def harness(spark):
 
 def test_three_duplicates_one_send(spark, harness):
     harness.start(
-        lambda s: ttl_dedup(s, ttl_seconds=3600,
-                            order_cols=["ts"], use_timers=False)
+        lambda s: ttl_dedup(s, ttl_seconds=3600, order_cols=["ts"])
     )
     harness.add_batch(
         [
@@ -75,8 +75,7 @@ def test_three_duplicates_one_send(spark, harness):
 def test_duplicate_across_batches_then_ttl_expiry(spark, harness):
     ttl = 6.0
     harness.start(
-        lambda s: ttl_dedup(s, ttl_seconds=ttl,
-                            order_cols=["ts"], use_timers=False)
+        lambda s: ttl_dedup(s, ttl_seconds=ttl, order_cols=["ts"])
     )
     harness.add_batch([Row(idempotent_key="k", payload="a", ts=1.0)])
     harness.add_batch([Row(idempotent_key="k", payload="b", ts=2.0)])
@@ -91,6 +90,28 @@ def test_duplicate_across_batches_then_ttl_expiry(spark, harness):
     assert _statuses(rows, "k")[-1] == (3.0, "SENT")
 
 
+def _state_ops(progress):
+    return [p["stateOperators"][0] for p in progress if p["stateOperators"]]
+
+
+def test_available_now_pass_removes_expired_keys(spark, harness):
+    """A bounded pass clears expired state too: once TTL + delay
+    (``min(TTL, 1 hour)``) has passed, the pass that brings k2 moves the
+    watermark past k1's deadline, and its trailing batch removes k1."""
+    ttl = 2.0
+    harness.start(
+        lambda s: ttl_dedup(s, ttl_seconds=ttl, order_cols=["ts"])
+    )
+    first = harness.add_batch([Row(idempotent_key="k1", payload="a", ts=1.0)])
+    assert _state_ops(first)[-1]["numRowsTotal"] == 1
+    time.sleep(2 * ttl + 1)
+    ops = _state_ops(
+        harness.add_batch([Row(idempotent_key="k2", payload="b", ts=2.0)])
+    )
+    assert sum(op["numRowsRemoved"] for op in ops) >= 1
+    assert ops[-1]["numRowsTotal"] == 1  # k2 alone
+    assert all(op["numRowsDroppedByWatermark"] == 0 for op in ops)
+    assert _statuses(harness.results(), "k2") == [(2.0, "SENT")]
 
 
 def test_multichunk_key_sends_globally_first_row(spark):
@@ -101,10 +122,7 @@ def test_multichunk_key_sends_globally_first_row(spark):
     try:
         h = StreamHarness(spark, SCHEMA)
         h.start(
-            lambda s: ttl_dedup(
-                s, ttl_seconds=3600,
-                order_cols=["ts"], use_timers=False,
-            )
+            lambda s: ttl_dedup(s, ttl_seconds=3600, order_cols=["ts"])
         )
         # 10 rows, one key, descending ts — the LAST row (ts=1.0) is
         # globally first and sits in the final Arrow chunk.
@@ -175,8 +193,7 @@ def test_hot_key_batch_is_bounded_and_correct(spark, harness):
     SENT_OR_DUPLICATED, all rows EMITTED (D4)."""
     n = 50_000
     harness.start(
-        lambda s: ttl_dedup(s, ttl_seconds=3600,
-                            order_cols=["ts"], use_timers=False)
+        lambda s: ttl_dedup(s, ttl_seconds=3600, order_cols=["ts"])
     )
     harness.add_batch(
         [
