@@ -92,3 +92,11 @@ KO_RESPONSE_BODY = "ko"
 
 # Initial-load tag prefix (reference: MediationService.scala:57).
 INITIAL_LOAD_PREFIX = "INITIAL_LOAD_"
+
+
+def struct_ddl(schema: T.StructType, *extra: str) -> str:
+    """DDL of ``schema``'s fields in order, then the ``extra`` fields:
+    an operator's output type of its input columns plus its own. Parsed
+    back, every field is nullable."""
+    own = [f"{f.name} {f.dataType.simpleString()}" for f in schema.fields]
+    return ", ".join(own + list(extra))

@@ -51,7 +51,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from scio_db_spark.schemas import NOT_HTTP_RESPONSE_ID, SENT_OR_DUPLICATED
+from scio_db_spark.schemas import (
+    NOT_HTTP_RESPONSE_ID,
+    SENT_OR_DUPLICATED,
+    struct_ddl,
+)
 
 #: Output columns appended to the input rows by :func:`send_http_batch`.
 RESPONSE_FIELDS = (
@@ -300,10 +304,7 @@ def send_http_batch(
     clash = [c for c in batch_df.columns if c in resp_names]
     if clash:
         batch_df = batch_df.drop(*clash)
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in batch_df.schema.fields
-    )
-    out_schema = f"{out_schema}, {RESPONSE_FIELDS}"
+    out_schema = struct_ddl(batch_df.schema, RESPONSE_FIELDS)
 
     def _send_partition(pdfs: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         bucket = _bucket_for(throttle_rps) if throttle_rps else None

@@ -32,9 +32,12 @@ LOUDLY (never a silent wrap; widen the state schema if a deployment
 ever approaches that).
 
 Scale: batch form is one shuffle on the key + running integer window
-(no second scan); streaming state is THREE integers per key,
-hash-partitioned in the state store — cardinality-bounded, not
-volume-bounded.
+(no second scan); streaming state is the three integers plus the
+key's last-touch time, hash-partitioned in the state store —
+cardinality-bounded, not volume-bounded. ``idle_timeout_ms`` bounds
+it to live keys: idle keys expire on the TTL gate's batch clock
+(streaming/ttl_dedup.py), so a bounded pass ends and an idle
+continuous query stops running batches.
 """
 
 from __future__ import annotations
@@ -48,9 +51,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from scio_db_spark.schemas import struct_ddl
 from scio_db_spark.streaming.exactness import exact_int64
+from scio_db_spark.streaming.ttl_dedup import arm_timeout, stamp_batch_clock
 
-_STATE_SCHEMA = "n long, sx long, sx2 long"
+_STATE_SCHEMA = "n long, sx long, sx2 long, touched_ms long"
 
 
 def _cents(col: Column) -> Column:
@@ -142,8 +147,6 @@ def anomaly_plan_batch(
 
 
 def _make_anomaly_fn(
-    key_col: str,
-    value_col: str,
     order_cols: tuple[str, ...],
     k: int,
     min_n: int,
@@ -155,18 +158,20 @@ def _make_anomaly_fn(
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            # Idle eviction: drop the (n, Σx, Σx²) triple. The key is
-            # NOT remembered as anomalous or clean — if it comes back,
-            # it re-warms from n=0 (is_scored stays False until min_n
-            # readings accrue again) instead of being judged against a
-            # stale distribution.
+        if state.hasTimedOut:
+            # Idle eviction: the batch clock passed the key's idle
+            # deadline — drop its state.
             state.remove()
-            yield pd.DataFrame(
-                columns=passthrough + ["is_scored", "is_anomaly", "n_prev"]
-            )
             return
-        n, sx, sx2 = state.get if state.exists else (0, 0, 0)
+        now = state.getCurrentProcessingTimeMs()
+        n, sx, sx2, touched = state.get if state.exists else (0, 0, 0, now)
+        if idle_timeout_ms is not None and now - touched >= idle_timeout_ms:
+            # Idle past the deadline but not yet timed out (a key with
+            # data never is): expire inline. The key is NOT remembered
+            # as anomalous or clean — it re-warms from n=0 (is_scored
+            # stays False until min_n readings accrue again) instead of
+            # being judged against a stale distribution.
+            n, sx, sx2 = 0, 0, 0
         rows = pd.concat(list(pdfs), ignore_index=True)
         # NULL values are excluded from output and history (the batch
         # twin filters them before its windows); without this a NULL
@@ -184,17 +189,13 @@ def _make_anomaly_fn(
             out_anom.append(scored and _decide_int(n, sx, sx2, c, k))
             out_nprev.append(n)
             n, sx, sx2 = n + 1, sx + c, sx2 + c * c
-        # Skip the state write when the whole micro-batch was filtered
-        # out (all-NULL readings): nothing changed, and a key with no
-        # prior state must not get a useless (0,0,0) entry allocated.
-        if len(rows):
-            state.update((n, sx, sx2))
-        # Re-arm the idle clock on EVERY batch that touched the key
-        # (even an all-NULL one — the key is demonstrably alive), as
-        # long as state exists to evict. setTimeoutDuration must be
-        # re-issued per invocation: Spark clears it after each call.
-        if idle_timeout_ms is not None and (len(rows) or state.exists):
-            state.setTimeoutDuration(int(idle_timeout_ms))
+        # Every batch that touches a key with state resets its idle
+        # clock (even an all-NULL one — the key is demonstrably alive);
+        # an all-NULL batch allocates no state for a new key.
+        if len(rows) or state.exists:
+            state.update((n, sx, sx2, now))
+            if idle_timeout_ms is not None:
+                arm_timeout(state, idle_timeout_ms)
         res = rows[passthrough].copy()
         res["is_scored"] = out_scored
         res["is_anomaly"] = out_anom
@@ -215,42 +216,35 @@ def anomaly_detect_stream(
 ) -> DataFrame:
     """Streaming form: per-key state is (n, Σx, Σx²) — the same
     integers the batch windows compute, so decisions are identical
-    for identical row order. Output = input columns + is_scored,
-    is_anomaly, n_prev (append mode).
+    for identical row order — plus the batch time the key was last
+    touched. Output = input columns + is_scored, is_anomaly, n_prev
+    (append mode).
 
-    ``idle_timeout_ms``: evict a key's state after that much
-    processing-time idleness (the ttl_dedup timeout machinery). At
-    1M+ distinct keys the state store is the scaling bound — without
-    eviction a one-shot key holds 3 int64s forever. Live keys'
-    decisions are unchanged (the clock re-arms on every batch that
-    touches the key); an evicted key that returns RE-WARMS from n=0
-    (is_scored False until min_n readings) rather than being scored
-    against a stale distribution. None = keep state forever."""
+    ``idle_timeout_ms``: expire a key once that long passes without a
+    batch touching it, on the TTL gate's batch clock
+    (``stamp_batch_clock``). At 1M+ distinct keys the state store is
+    the scaling bound — without eviction a one-shot key holds its
+    state forever. Live keys' decisions are unchanged; a key that
+    returns after the idle time RE-WARMS from n=0 (is_scored False
+    until min_n readings), whether or not a trailing batch has removed
+    its state yet. None = keep state forever. The state layout is the
+    same either way, so a checkpoint can switch eviction on or off."""
     passthrough = list(stream_df.columns)
-    keyed = stream_df.withColumn("__x", _cents(F.col(value_col)))
-    schema_in = dict(zip(stream_df.schema.names, stream_df.schema.fields))
-    out_fields = ", ".join(
-        f"{c} {schema_in[c].dataType.simpleString()}" for c in passthrough
-    )
-    out_type = (
-        f"{out_fields}, is_scored boolean, is_anomaly boolean, n_prev long"
+    keyed = stamp_batch_clock(
+        stream_df.withColumn("__x", _cents(F.col(value_col))),
+        idle_timeout_ms,
     )
     return keyed.groupBy(key_col).applyInPandasWithState(
         func=_make_anomaly_fn(
-            key_col,
-            value_col,
-            order_cols,
-            k,
-            min_n,
-            passthrough,
-            idle_timeout_ms,
+            order_cols, k, min_n, passthrough, idle_timeout_ms
         ),
-        outputStructType=out_type,
+        outputStructType=struct_ddl(
+            stream_df.schema,
+            "is_scored boolean",
+            "is_anomaly boolean",
+            "n_prev long",
+        ),
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if idle_timeout_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+        timeoutConf=GroupStateTimeout.EventTimeTimeout,
     )

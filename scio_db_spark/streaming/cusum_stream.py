@@ -11,10 +11,9 @@ exact Python/int64 integers over pre-quantized values (cents) — no
 float anywhere, the streaming/anomaly.py policy.
 
 Scale: state is cardinality-bounded (3 ints per key), hash-
-partitioned in the state store. ``idle_timeout_ms`` evicts idle
-keys the same way anomaly_detect_stream does; an evicted key that
-returns restarts its statistic from S=0 (a fresh monitoring window)
-rather than resuming a stale drift estimate.
+partitioned in the state store, and kept for every key ever seen (no
+timeout, as in scd2.py and kmv_stream.py): a key's drift statistic
+never restarts.
 
 Overflow posture: P is a signed sum of (value - target) cents; a key
 needs ~9e18 / |typical d| rows to overflow int64 (state.update then
@@ -33,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from scio_db_spark.schemas import struct_ddl
 from scio_db_spark.streaming.exactness import exact_int64
 
 _STATE_SCHEMA = "p long, runmin long, prev_s long"
@@ -43,17 +43,12 @@ def _make_cusum_fn(
     target: int,
     threshold: int,
     passthrough: list[str],
-    idle_timeout_ms: int | None = None,
 ):
     def fn(
         key: Any,
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=passthrough + ["cusum", "is_alarm"])
-            return
         p, runmin, prev_s = state.get if state.exists else (0, 0, 0)
         rows = pd.concat(list(pdfs), ignore_index=True)
         # NULL values carry no evidence: excluded from output and
@@ -71,8 +66,6 @@ def _make_cusum_fn(
             prev_s = s
         if len(rows):
             state.update((p, runmin, prev_s))
-        if idle_timeout_ms is not None and (len(rows) or state.exists):
-            state.setTimeoutDuration(int(idle_timeout_ms))
         res = rows[passthrough].copy()
         res["cusum"] = out_s
         res["is_alarm"] = out_alarm
@@ -88,28 +81,18 @@ def cusum_detect_stream(
     order_cols: tuple[str, ...],
     target: int,
     threshold: int,
-    idle_timeout_ms: int | None = None,
 ) -> DataFrame:
     """Streaming CUSUM: input columns + ``cusum`` + ``is_alarm``
     (append mode). ``value_expr`` must be an exact-integer Column
     over the input (e.g. the cents quantization)."""
     passthrough = list(stream_df.columns)
     keyed = stream_df.withColumn("__x", value_expr)
-    schema_in = dict(zip(stream_df.schema.names, stream_df.schema.fields))
-    out_fields = ", ".join(
-        f"{c} {schema_in[c].dataType.simpleString()}" for c in passthrough
-    )
-    out_type = f"{out_fields}, cusum long, is_alarm boolean"
     return keyed.groupBy(key_col).applyInPandasWithState(
-        func=_make_cusum_fn(
-            order_cols, target, threshold, passthrough, idle_timeout_ms
+        func=_make_cusum_fn(order_cols, target, threshold, passthrough),
+        outputStructType=struct_ddl(
+            stream_df.schema, "cusum long", "is_alarm boolean"
         ),
-        outputStructType=out_type,
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if idle_timeout_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

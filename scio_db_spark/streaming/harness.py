@@ -8,12 +8,12 @@ so tests control exactly which records arrive in which micro-batch and
 per-key state survives between batches exactly as it would across
 micro-batches of a long-running query.
 
-Why not a single continuous query + ``processAllAvailable``? With
-``applyInPandasWithState(ProcessingTimeTimeout)`` Spark schedules
-timer-check batches continuously, so ``processAllAvailable`` never
-observes a quiescent stream and blocks forever. The start/stop model
-below is the deterministic equivalent: state (and armed timeouts) are
-restored from the checkpoint on every restart.
+Each pass ends after its data batches and any trailing batch a
+watermark move owes (closing windows, removing timed-out state), since
+no operator's timeout runs on processing time. State, watermarks and
+armed event-time timeouts are restored from the checkpoint on every
+restart, so a test that sleeps between passes moves the batch clock
+exactly as idle time moves it under a long-running query.
 """
 
 from __future__ import annotations
@@ -117,7 +117,8 @@ class StreamHarness:
         return self._run_pass() if wait else None
 
     def process_pending(self) -> None:
-        """Run one available-now pass without adding data (fires due timers)."""
+        """Run one available-now pass without adding data: only the
+        batch the last watermark move still owes, if any."""
         self._run_pass()
 
     def results(self) -> list:

@@ -15,10 +15,9 @@ divisions and subtraction rather than an integer-microsecond compare
 that could disagree at the boundary ulp.
 
 Scale: state is cardinality-bounded (2 ints/key), hash-partitioned in
-the state store. ``idle_timeout_ms`` evicts idle keys; an evicted key
-that returns starts again at session 1 — a DOCUMENTED divergence from
-the batch form (which sees all history), the same restart-on-return
-posture as streaming/anomaly.py and cusum_stream.py.
+the state store, and kept for every key ever seen (no timeout, as in
+scd2.py and kmv_stream.py), so session ids keep counting from the
+key's whole history, as the batch form's do.
 """
 
 from __future__ import annotations
@@ -32,7 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from scio_db_spark.operators.dedup import SENT
-from scio_db_spark.schemas import SENT_OR_DUPLICATED
+from scio_db_spark.schemas import SENT_OR_DUPLICATED, struct_ddl
 
 _STATE_SCHEMA = "last_us long, sid long"
 
@@ -42,18 +41,12 @@ def _make_session_fn(
     tie_cols: tuple[str, ...],
     ttl_seconds: int,
     passthrough: list[str],
-    idle_timeout_ms: int | None = None,
 ):
     def fn(
         key: Any,
         pdfs: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        cols = passthrough + ["session_id", "send_status"]
-        if idle_timeout_ms is not None and state.hasTimedOut:
-            state.remove()
-            yield pd.DataFrame(columns=cols)
-            return
         last_us, sid = state.get if state.exists else (None, 0)
         rows = pd.concat(list(pdfs), ignore_index=True)
         rows = rows.sort_values(
@@ -76,8 +69,6 @@ def _make_session_fn(
             last_us = us
         if len(rows):
             state.update((last_us, sid))
-        if idle_timeout_ms is not None and (len(rows) or state.exists):
-            state.setTimeoutDuration(int(idle_timeout_ms))
         res = rows[passthrough].copy()
         res["session_id"] = out_sid
         res["send_status"] = out_status
@@ -92,30 +83,18 @@ def sessionize_stream(
     ts_col: str,
     ttl_seconds: int,
     tie_cols: list[str] | None = None,
-    idle_timeout_ms: int | None = None,
 ) -> DataFrame:
     """Streaming twin of ttl_sessionize: input columns + session_id +
     send_status (append mode)."""
     passthrough = list(stream_df.columns)
-    schema_in = dict(zip(stream_df.schema.names, stream_df.schema.fields))
-    out_fields = ", ".join(
-        f"{c} {schema_in[c].dataType.simpleString()}" for c in passthrough
-    )
-    out_type = f"{out_fields}, session_id long, send_status string"
     return stream_df.groupBy(*key_cols).applyInPandasWithState(
         func=_make_session_fn(
-            ts_col,
-            tuple(tie_cols or []),
-            ttl_seconds,
-            passthrough,
-            idle_timeout_ms,
+            ts_col, tuple(tie_cols or []), ttl_seconds, passthrough
         ),
-        outputStructType=out_type,
+        outputStructType=struct_ddl(
+            stream_df.schema, "session_id long", "send_status string"
+        ),
         stateStructType=_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=(
-            GroupStateTimeout.NoTimeout
-            if idle_timeout_ms is None
-            else GroupStateTimeout.ProcessingTimeTimeout
-        ),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

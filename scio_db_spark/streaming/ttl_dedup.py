@@ -35,7 +35,9 @@ batch time plus what is left of its TTL. The delay keeps rows above the
 watermark when the wall clock steps back; a row below it would be
 dropped as late, a lost notification. Keys are removed in data batches
 and in the one trailing batch Spark runs after the watermark moves, so
-a query goes idle when its input does.
+a query goes idle when its input does. ``stamp_batch_clock`` and
+``arm_timeout`` hold that clock for every keyed stream that clears idle
+state (``anomaly_detect_stream`` too).
 
 Scale: state is hash-partitioned by key across executors in the
 RocksDB state store — ~1M live keys (BASELINE.md) fits comfortably,
@@ -55,13 +57,32 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from scio_db_spark.operators.keying import KEY_COL
-from scio_db_spark.schemas import SENT_OR_DUPLICATED
+from scio_db_spark.schemas import SENT_OR_DUPLICATED, struct_ddl
 
 SENT = "SENT"
 
 _STATE_SCHEMA = "first_sent_ms long"
-_BATCH_TS = "__batch_ts"
+BATCH_TS = "__batch_ts"
 _MAX_DELAY_MS = 3_600_000
+
+
+def stamp_batch_clock(df: DataFrame, ttl_ms: int | None) -> DataFrame:
+    """Stamp ``df`` with the micro-batch time as ``BATCH_TS`` under a
+    watermark delayed by ``min(ttl_ms, 1 hour)`` (1 hour for None): the
+    clock that ``arm_timeout``'s event-time timeouts run on."""
+    delay = _MAX_DELAY_MS if ttl_ms is None else min(ttl_ms, _MAX_DELAY_MS)
+    return df.withColumn(BATCH_TS, F.current_timestamp()).withWatermark(
+        BATCH_TS, f"{delay} milliseconds"
+    )
+
+
+def arm_timeout(state: GroupState, remaining_ms: int) -> None:
+    """Time the key out ``remaining_ms`` after this batch on the batch
+    clock. Spark drops the timeout after every call, so re-arm on every
+    visit."""
+    state.setTimeoutTimestamp(
+        state.getCurrentProcessingTimeMs() + max(1, int(remaining_ms))
+    )
 
 
 def _apply_ttl_gate(
@@ -136,10 +157,7 @@ def _make_dedup_fn(ttl_ms: int, order_cols: list[str] | None, clock_ms=None):
             state.update((int(first_sent),))
             # Re-arm relative to the FIRST send so duplicates never
             # extend the TTL.
-            remaining = max(1, first_sent + ttl_ms - now)
-            state.setTimeoutTimestamp(
-                state.getCurrentProcessingTimeMs() + int(remaining)
-            )
+            arm_timeout(state, first_sent + ttl_ms - now)
 
     return dedup_fn
 
@@ -161,21 +179,15 @@ def ttl_dedup(
     batch, and a continuous query goes idle with its input.
     """
     ttl_ms = int(ttl_seconds * 1000)
-    stamped = keyed_df.withColumn(_BATCH_TS, F.current_timestamp())
-    stamped = stamped.withWatermark(
-        _BATCH_TS, f"{min(ttl_ms, _MAX_DELAY_MS)} milliseconds"
-    )
-    out_cols = [
-        f"{f.name} {f.dataType.simpleString()}" for f in stamped.schema.fields
-    ]
+    stamped = stamp_batch_clock(keyed_df, ttl_ms)
     return (
         stamped.groupBy(KEY_COL)
         .applyInPandasWithState(
             func=_make_dedup_fn(ttl_ms, order_cols, clock_ms),
-            outputStructType=", ".join(out_cols) + ", send_status string",
+            outputStructType=struct_ddl(stamped.schema, "send_status string"),
             stateStructType=_STATE_SCHEMA,
             outputMode="update",
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
-        .drop(_BATCH_TS)
+        .drop(BATCH_TS)
     )

@@ -183,98 +183,14 @@ def test_stream_equals_batch_across_microbatches(spark):
         ), key
 
 
-class _ContinuousRun:
-    """Continuous-trigger driver for ProcessingTimeTimeout tests: an
-    AvailableNow pass never terminates under that timeout conf (Spark
-    keeps scheduling no-data batches to service timers — verified on
-    this image), so these tests run ONE live query and poll collected
-    rows with a deadline."""
-
-    def __init__(self, spark, schema, transform):
-        import tempfile
-
-        self.spark = spark
-        self.schema = schema
-        self.input_dir = tempfile.mkdtemp(prefix="anom_in_")
-        self.ck = tempfile.mkdtemp(prefix="anom_ck_")
-        self.rows = []
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(self.input_dir)
-        )
-        self.q = (
-            transform(stream)
-            .writeStream.foreachBatch(
-                lambda b, _e: self.rows.extend(b.collect())
-            )
-            .outputMode("append")
-            .option("checkpointLocation", self.ck)
-            .trigger(processingTime="150 milliseconds")
-            .start()
-        )
-
-    def feed(self, rows):
-        import os
-        import tempfile
-        import uuid
-
-        df = self.spark.createDataFrame(rows, self.schema)
-        staging = tempfile.mkdtemp(prefix="anom_stage_")
-        df.coalesce(1).write.mode("overwrite").parquet(staging)
-        part = next(
-            f for f in os.listdir(staging)
-            if f.startswith("part-") and f.endswith(".parquet")
-        )
-        os.rename(
-            os.path.join(staging, part),
-            os.path.join(
-                self.input_dir, f"b_{uuid.uuid4().hex}.parquet"
-            ),
-        )
-
-    def wait_rows(self, n, deadline_s=60):
-        import time
-
-        t0 = time.time()
-        while len(self.rows) < n:
-            if time.time() - t0 > deadline_s:
-                raise AssertionError(
-                    f"timed out waiting for {n} rows, have "
-                    f"{len(self.rows)}"
-                )
-            time.sleep(0.1)
-
-    def stop(self):
-        import shutil
-
-        self.q.stop()
-        shutil.rmtree(self.input_dir, ignore_errors=True)
-        shutil.rmtree(self.ck, ignore_errors=True)
-
-
-def test_idle_timeout_live_keys_unchanged(spark):
-    """With an idle TTL the batch cadence never reaches, every decision
-    must be identical to the batch plan — eviction only touches keys
-    that actually idle."""
-    vals = _baseline(40) + [500.0, 11.0]
-    all_rows = _rows("a", vals)
-    run = _ContinuousRun(
-        spark,
-        SCHEMA,
-        lambda s: anomaly_detect_stream(
-            s, "k", "value", ("seq",), k=3, min_n=30,
-            idle_timeout_ms=120_000,
-        ),
+def _detector(idle_timeout_ms, min_n=30):
+    return lambda s: anomaly_detect_stream(
+        s, "k", "value", ("seq",), k=3, min_n=min_n,
+        idle_timeout_ms=idle_timeout_ms,
     )
-    try:
-        run.feed([r for r in all_rows if r[1] < 25])
-        run.wait_rows(25)
-        run.feed([r for r in all_rows if r[1] >= 25])
-        run.wait_rows(len(all_rows))
-        stream_out = {r.seq: r for r in run.rows}
-    finally:
-        run.stop()
+
+
+def _assert_matches_batch(spark, all_rows, stream_out):
     df = spark.createDataFrame(all_rows, SCHEMA)
     for b in anomaly_plan_batch(
         df, "k", "value", ("seq",), k=3, min_n=30
@@ -287,35 +203,88 @@ def test_idle_timeout_live_keys_unchanged(spark):
         )
 
 
+def _state_ops(progress):
+    return [p["stateOperators"][0] for p in progress if p["stateOperators"]]
+
+
+def test_idle_timeout_live_keys_unchanged(spark):
+    """With an idle TTL the batch cadence never reaches, every decision
+    must be identical to the batch plan — eviction only touches keys
+    that actually idle."""
+    vals = _baseline(40) + [500.0, 11.0]
+    all_rows = _rows("a", vals)
+    h = StreamHarness(spark, SCHEMA)
+    h.start(_detector(120_000), output_mode="append")
+    try:
+        h.add_batch([r for r in all_rows if r[1] < 25])
+        h.add_batch([r for r in all_rows if r[1] >= 25])
+        stream_out = {r.seq: r for r in h.results()}
+    finally:
+        h.stop()
+    _assert_matches_batch(spark, all_rows, stream_out)
+
+
 def test_idle_timeout_evicts_and_rewarms(spark):
-    """A key idle past the TTL is evicted by the running query's timer
-    batches; when it returns it re-warms from n=0 (is_scored False
-    until min_n readings) instead of being scored against the stale
-    history."""
+    """A key idle past the TTL is removed by the trailing batch of a
+    pass that brings another key once TTL + delay have passed; when it
+    returns it re-warms from n=0 (is_scored False until min_n
+    readings) instead of being scored against the stale history."""
     import time
 
-    run = _ContinuousRun(
-        spark,
-        SCHEMA,
-        lambda s: anomaly_detect_stream(
-            s, "k", "value", ("seq",), k=3, min_n=5, idle_timeout_ms=800
-        ),
-    )
+    h = StreamHarness(spark, SCHEMA)
+    h.start(_detector(800, min_n=5), output_mode="append")
     try:
-        run.feed(_rows("a", [10.0, 12.0, 10.0, 12.0, 10.0, 11.0]))
-        run.wait_rows(6)
-        warm = {r.seq: r for r in run.rows}
+        h.add_batch(_rows("a", [10.0, 12.0, 10.0, 12.0, 10.0, 11.0]))
+        warm = {r.seq: r for r in h.results()}
         assert warm[5].is_scored and warm[5].n_prev == 5
 
-        # Idle well past the TTL: the continuous query's no-data
-        # batches fire the timeout and evict the state.
+        # Idle past TTL + delay (0.8 s each): the pass with key b moves
+        # the batch-clock watermark past a's deadline.
         time.sleep(3.0)
+        ops = _state_ops(h.add_batch(_rows("b", [5.0])))
+        assert sum(op["numRowsRemoved"] for op in ops) >= 1
         # Key a returns: a huge spike that WOULD flag against the old
         # history must instead re-warm silently from zero state.
-        run.feed(_rows("a", [999.0], start=6))
-        run.wait_rows(7)
-        back = {(r.k, r.seq): r for r in run.rows}[("a", 6)]
+        h.add_batch(_rows("a", [999.0], start=6))
+        back = {(r.k, r.seq): r for r in h.results()}[("a", 6)]
     finally:
-        run.stop()
+        h.stop()
     assert back.n_prev == 0
     assert not back.is_scored and not back.is_anomaly
+
+
+def test_idle_timeout_expires_inline_without_other_traffic(spark):
+    """No other key moves the watermark, so no timeout can fire before
+    key a returns: the batch that brings it back expires it inline."""
+    import time
+
+    h = StreamHarness(spark, SCHEMA)
+    h.start(_detector(1000, min_n=5), output_mode="append")
+    try:
+        h.add_batch(_rows("a", [10.0, 12.0, 10.0, 12.0, 10.0, 11.0]))
+        time.sleep(1.5)
+        h.add_batch(_rows("a", [999.0], start=6))
+        back = {(r.k, r.seq): r for r in h.results()}[("a", 6)]
+    finally:
+        h.stop()
+    assert back.n_prev == 0
+    assert not back.is_scored and not back.is_anomaly
+
+
+def test_checkpoint_survives_turning_eviction_on(spark):
+    """A checkpoint written with eviction off restarts with it on: the
+    state layout and timeout are the same in both modes, and the
+    restarted leg scores against the history leg 1 left."""
+    vals = _baseline(40) + [500.0, 11.0]
+    all_rows = _rows("a", vals)
+    h = StreamHarness(spark, SCHEMA)
+    try:
+        h.start(_detector(None), output_mode="append")
+        h.add_batch([r for r in all_rows if r[1] < 25])
+        h.start(_detector(120_000), output_mode="append")
+        h.add_batch([r for r in all_rows if r[1] >= 25])
+        stream_out = {r.seq: r for r in h.results()}
+    finally:
+        h.stop()
+    assert len(stream_out) == len(all_rows)
+    _assert_matches_batch(spark, all_rows, stream_out)

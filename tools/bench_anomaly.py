@@ -3,7 +3,7 @@
 Sibling of bench_corpus_ingest.py: pushes N
 synthetic keyed readings through the stateful k-sigma detector
 (streaming/anomaly.py::anomaly_detect_stream — per-key state is three
-integers) and reports records/min against the reference's 200K/min
+integers and a last-touch time) and reports records/min against the reference's 200K/min
 mediation stress posture (the closest published throughput figure;
 the reference has no anomaly operator).
 
@@ -17,9 +17,7 @@ regime where eviction pays: a key's readings cluster, then the key
 goes idle and its (n, Σx, Σx²) triple is dropped, so the state store
 tracks ACTIVE keys instead of every key ever seen. With the default
 ``mod`` layout every key stays active for the whole run and eviction
-never fires (decisions unchanged — pinned in tests). A ProcessingTime
-timeout makes ``processAllAvailable`` block forever (timer batches
-never quiesce), so the idle-ms path polls the row counter instead.
+never fires (decisions unchanged — pinned in tests).
 """
 
 from __future__ import annotations
@@ -108,15 +106,8 @@ def main() -> None:
         .option("checkpointLocation", ck)
         .start()
     )
-    if idle_ms is None:
-        q.processAllAvailable()
-        elapsed = time.perf_counter() - t0
-    else:
-        # Timer batches never quiesce under ProcessingTimeTimeout —
-        # poll the counter until the full input has been scored.
-        while counts["rows"] < n_records:
-            time.sleep(0.25)
-        elapsed = time.perf_counter() - t0
+    q.processAllAvailable()
+    elapsed = time.perf_counter() - t0
     q.stop()
 
     print(
