@@ -10,6 +10,7 @@ shuffle partitions) while remaining testable on ``local[N]``.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -69,6 +70,15 @@ _SCALE_DEFAULTS: dict[str, str] = {
     # lives here and not at the setCheckpointDir call site.
     "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
 }
+# Python workers fork from a daemon whose zip import cache re-reads
+# pyspark.zip only when it changed: on Python < 3.13 each task's
+# importlib.invalidate_caches() otherwise costs 130-270 ms of CPU
+# (python_daemon.py). Static conf; the daemon imports scio_db_spark,
+# so the package must be importable where workers start. The version
+# check is not imported from python_daemon: the package must not load
+# that module before ``python -m`` runs it.
+if sys.version_info < (3, 13):
+    _SCALE_DEFAULTS["spark.python.daemon.module"] = "scio_db_spark.python_daemon"
 
 
 class SessionFactory:

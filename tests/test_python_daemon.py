@@ -1,0 +1,227 @@
+"""The engine's Python worker daemon: a zip import cache that re-reads only what changed.
+
+The unit cases run in a fresh interpreter that loads
+``scio_db_spark/python_daemon.py`` by path and installs its patch, so
+this pytest process keeps the stdlib ``zipimporter``. The worker case
+checks the patch from inside a Python worker of the shared session.
+"""
+
+from __future__ import annotations
+
+import json
+import os
+import subprocess
+import sys
+import textwrap
+
+import pytest
+
+_MODULE = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "scio_db_spark",
+    "python_daemon.py",
+)
+
+# Loads the module by path (no pyspark import), optionally installs the
+# patch, and gives the case a counter of zipimport._read_directory calls.
+_PRELUDE = """
+import importlib, importlib.util, json, os, sys, zipfile, zipimport
+if os.environ.get("FAKE_VERSION"):
+    sys.version_info = tuple(int(p) for p in os.environ["FAKE_VERSION"].split(".")) + ("final", 0)
+stdlib_method = zipimport.zipimporter.invalidate_caches
+spec = importlib.util.spec_from_file_location("python_daemon", os.environ["DAEMON_MODULE"])
+python_daemon = importlib.util.module_from_spec(spec)
+spec.loader.exec_module(python_daemon)
+installed = python_daemon.install() if os.environ["PATCH"] == "1" else False
+reads = []
+_read_directory = zipimport._read_directory
+def _counting(path):
+    reads.append(path)
+    return _read_directory(path)
+zipimport._read_directory = _counting
+def write_zip(path, files):
+    with zipfile.ZipFile(path, "w") as z:
+        for name, src in files.items():
+            z.writestr(name, src)
+tmp = sys.argv[1]
+"""
+
+
+def _run(case: str, tmp_path, patch: bool = True, fake_version: str = "") -> dict:
+    env = dict(
+        os.environ,
+        DAEMON_MODULE=_MODULE,
+        PATCH="1" if patch else "0",
+        FAKE_VERSION=fake_version,
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _PRELUDE + textwrap.dedent(case), str(tmp_path)],
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=120,
+        check=True,
+    ).stdout
+    return json.loads(out.strip().splitlines()[-1])
+
+
+_UNCHANGED_ZIP = """
+zpath = os.path.join(tmp, "lib.zip")
+write_zip(zpath, {
+    "pa/__init__.py": "", "pa/m.py": "X = 1",
+    "pb/__init__.py": "", "pb/m.py": "Y = 2",
+})
+sys.path.insert(0, zpath)
+import pa.m, pb.m
+before = len(reads)
+per_call = []
+for _ in range(2):
+    n = len(reads)
+    importlib.invalidate_caches()
+    per_call.append(len(reads) - n)
+import pa.m as again
+print(json.dumps({"installed": installed, "import_reads": before,
+                  "per_call": per_call, "x": again.X}))
+"""
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="stdlib is lazy on 3.13+")
+def test_unchanged_zip_is_not_read_again(tmp_path):
+    # Three importers share lib.zip: the root and one per subpackage.
+    r = _run(_UNCHANGED_ZIP, tmp_path)
+    assert r["installed"] is True
+    assert r["import_reads"] == 1
+    # The first call reads the archive once to stamp it, then never.
+    assert r["per_call"] == [1, 0]
+    assert r["x"] == 1
+    # The stdlib method re-reads once per importer on every call.
+    assert _run(_UNCHANGED_ZIP, tmp_path, patch=False)["per_call"] == [3, 3]
+
+
+@pytest.mark.parametrize("patch", [True, False], ids=["patched", "stdlib"])
+def test_rewritten_zip_is_read_again(tmp_path, patch):
+    r = _run(
+        """
+        zpath = os.path.join(tmp, "mods.zip")
+        write_zip(zpath, {"zmod_a.py": "A = 1"})
+        sys.path.insert(0, zpath)
+        import zmod_a
+        importlib.invalidate_caches()
+        write_zip(zpath, {"zmod_b.py": "B = 'two'"})
+        del sys.modules["zmod_a"]
+        importlib.invalidate_caches()
+        import zmod_b
+        try:
+            import zmod_a
+            a_gone = False
+        except ImportError:
+            a_gone = True
+        print(json.dumps({"b": zmod_b.B, "a_gone": a_gone}))
+        """,
+        tmp_path,
+        patch=patch,
+    )
+    assert r == {"b": "two", "a_gone": True}
+
+
+def test_new_file_in_path_directory_is_importable(tmp_path):
+    # The addFile case: a .py lands in a sys.path directory after that
+    # directory's listing was cached; FileFinder invalidation is untouched.
+    r = _run(
+        """
+        d = os.path.join(tmp, "files")
+        os.mkdir(d)
+        with open(os.path.join(d, "first_mod.py"), "w") as f:
+            f.write("V = 1")
+        sys.path.insert(0, d)
+        import first_mod
+        with open(os.path.join(d, "late_mod.py"), "w") as f:
+            f.write("V = 2")
+        importlib.invalidate_caches()
+        import late_mod
+        print(json.dumps({"v": late_mod.V, "installed": installed}))
+        """,
+        tmp_path,
+    )
+    assert r == {"v": 2, "installed": sys.version_info < (3, 13)}
+
+
+@pytest.mark.parametrize("fake_version", ["", "3.13.0"], ids=["native", "as_3_13"])
+def test_stdlib_method_kept_from_3_13(tmp_path, fake_version):
+    r = _run(
+        """
+        print(json.dumps({"installed": installed,
+                          "stdlib": zipimport.zipimporter.invalidate_caches is stdlib_method,
+                          "py313": sys.version_info >= (3, 13)}))
+        """,
+        tmp_path,
+        fake_version=fake_version,
+    )
+    assert r["installed"] is not r["py313"]
+    assert r["stdlib"] is r["py313"]
+
+
+@pytest.mark.skipif(sys.version_info >= (3, 13), reason="stdlib is lazy on 3.13+")
+def test_workers_fork_from_patched_daemon(spark):
+    # Nested, so cloudpickle ships it by value: workers cannot import
+    # this test module.
+    def zip_cache(it):
+        import importlib
+        import zipimport
+
+        import pandas as pd
+
+        reads = []
+        read_directory = zipimport._read_directory
+
+        def counting(path):
+            reads.append(path)
+            return read_directory(path)
+
+        zipimport._read_directory = counting
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        for _ in it:
+            pass
+        patched = zipimport.zipimporter.invalidate_caches.__module__ != "zipimport"
+        yield pd.DataFrame({"patched": [patched], "reads": [len(reads)]})
+
+    rows = (
+        spark.range(4, numPartitions=2)
+        .mapInPandas(zip_cache, "patched boolean, reads long")
+        .collect()
+    )
+    assert [(r.patched, r.reads) for r in rows] == [(True, 0), (True, 0)]
+
+
+def test_live_session_without_daemon_conf_keeps_working():
+    # A session someone else started without the conf: SessionFactory
+    # cannot change a static conf, so it raises nothing, returns that
+    # session, and its workers keep forking from pyspark's daemon.
+    script = """
+import pandas as pd
+from pyspark.sql import SparkSession
+spark = SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+from scio_db_spark.session import SessionFactory
+same = SessionFactory.create("live") is spark
+def module(it):
+    import zipimport
+    for _ in it:
+        pass
+    yield pd.DataFrame({"m": [zipimport.zipimporter.invalidate_caches.__module__]})
+rows = spark.range(1).mapInPandas(module, "m string").collect()
+print(same, spark.sparkContext.getConf().get("spark.python.daemon.module"), rows[0].m)
+"""
+    repo = os.path.dirname(os.path.dirname(_MODULE))
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=repo,
+        env=dict(os.environ, PYTHONPATH=repo),
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+    ).stdout
+    assert out.strip().splitlines()[-1] == "True None zipimport"
