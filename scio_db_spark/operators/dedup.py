@@ -24,9 +24,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from scio_db_spark.schemas import SENT_OR_DUPLICATED
-
-SENT = "SENT"
+from scio_db_spark.schemas import SENT, SENT_OR_DUPLICATED
 
 
 def distinct_by_key(df: DataFrame, *key_cols: str) -> DataFrame:

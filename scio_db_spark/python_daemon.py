@@ -1,8 +1,8 @@
 """Python worker daemon for engine sessions.
 
 Spark starts it as ``spark.python.daemon.module`` (``SessionFactory``
-sets that on Python < 3.13); it is pyspark's own daemon with one change
-made before the daemon forks any worker.
+sets that); it is pyspark's own daemon with one change made before the
+daemon forks any worker, on Python < 3.13 only.
 
 Every Python task runs ``pyspark.worker_util.setup_spark_files``, which
 calls ``importlib.invalidate_caches()`` so that files shipped with

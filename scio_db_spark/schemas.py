@@ -87,8 +87,9 @@ HTTP_RESPONSE_SCHEMA = T.StructType(
 
 # Response sentinels (reference: MyHttpResponse.scala:9-17).
 NOT_HTTP_RESPONSE_ID = 0
+SENT = "SENT"
 SENT_OR_DUPLICATED = "SENT_OR_DUPLICATED"
-KO_RESPONSE_BODY = "ko"
+KO_RESPONSE_BODY = "ko"  # koNotificationResponse, MyHttpResponse.scala:13-14
 
 # Initial-load tag prefix (reference: MediationService.scala:57).
 INITIAL_LOAD_PREFIX = "INITIAL_LOAD_"

@@ -10,8 +10,9 @@ shuffle partitions) while remaining testable on ``local[N]``.
 from __future__ import annotations
 
 import os
-import sys
+import warnings
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 # Defaults chosen for the 100 TB design point, still correct locally:
@@ -69,16 +70,17 @@ _SCALE_DEFAULTS: dict[str, str] = {
     # ContextCleaner reads it once at context start, which is why it
     # lives here and not at the setCheckpointDir call site.
     "spark.cleaner.referenceTracking.cleanCheckpoints": "true",
+    # Python workers fork from a daemon whose zip import cache re-reads
+    # pyspark.zip only when it changed (python_daemon.py; from Python
+    # 3.13 the stdlib does that and the daemon only hands over). Static
+    # conf, as is the workers' path: it carries the directory holding
+    # this package, so the daemon and the UDFs import scio_db_spark
+    # wherever the driver was started.
+    "spark.python.daemon.module": "scio_db_spark.python_daemon",
+    "spark.executorEnv.PYTHONPATH": os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))
+    ),
 }
-# Python workers fork from a daemon whose zip import cache re-reads
-# pyspark.zip only when it changed: on Python < 3.13 each task's
-# importlib.invalidate_caches() otherwise costs 130-270 ms of CPU
-# (python_daemon.py). Static conf; the daemon imports scio_db_spark,
-# so the package must be importable where workers start. The version
-# check is not imported from python_daemon: the package must not load
-# that module before ``python -m`` runs it.
-if sys.version_info < (3, 13):
-    _SCALE_DEFAULTS["spark.python.daemon.module"] = "scio_db_spark.python_daemon"
 
 
 class SessionFactory:
@@ -105,44 +107,29 @@ class SessionFactory:
             conf.update(extra_conf)
         for k, v in conf.items():
             builder = builder.config(k, v)
+        live = SparkContext._active_spark_context is not None
         spark = builder.getOrCreate()
-        # getOrCreate returns an EXISTING session with all builder
-        # confs silently ignored. Re-apply every requested conf at
-        # runtime so callers actually get what they asked for; confs
-        # that are static (can't change post-start) and differ from
-        # the running value are a real conflict — warn loudly instead
-        # of letting streaming code run with heap state / wrong TZ and
-        # no indication.
-        def _norm(x: object) -> str:
-            # Compare normalized forms: Python True vs Spark's 'true',
-            # stray whitespace, etc. — naive str(v) inequality triggers
-            # redundant sets and spurious static-conf warnings for
-            # semantically-equal values.
-            s = str(x).strip()
-            return s.lower() if s.lower() in ("true", "false") else s
-
-        for k, v in conf.items():
-            try:
-                if _norm(spark.conf.get(k, None)) != _norm(v):
-                    spark.conf.set(k, v)
-            except Exception:  # noqa: BLE001 — static conf on a live session
-                # The equality probe must not raise out of session
-                # creation: if the ORIGINAL failure came from conf.get
-                # itself (not conf.set), a bare re-read here would
-                # re-raise instead of warning. Any probe failure falls
-                # through to the warning path.
-                try:
-                    existing = spark.conf.get(k, None)
-                    if _norm(existing) == _norm(v):
-                        continue  # effective value already matches
-                except Exception:  # noqa: BLE001
-                    existing = "<unreadable>"
-                import warnings
-
+        # On a live session getOrCreate applies the SQL confs that are
+        # not static, but the running context keeps its own core confs
+        # (heap, worker daemon, ...): name every conf that did not take.
+        # A fresh context took every conf from the builder, and Spark
+        # extends some of them (spark.driver.extraJavaOptions), so there
+        # is nothing to check.
+        if live:
+            running = spark.sparkContext.getConf()
+            kept = []
+            for k, v in conf.items():
+                # SQL confs live in the session, the rest in the context.
+                if k.startswith("spark.sql."):
+                    now = spark.conf.get(k, None)
+                else:
+                    now = running.get(k)
+                if now != v:
+                    kept.append(f"{k}={now!r} (requested {v!r})")
+            if kept:
                 warnings.warn(
-                    f"SessionFactory: existing SparkSession pins static "
-                    f"conf {k!r}={existing!r}; requested "
-                    f"{v!r} was NOT applied",
+                    "SessionFactory: the running session keeps "
+                    + ", ".join(kept),
                     RuntimeWarning,
                     stacklevel=2,
                 )

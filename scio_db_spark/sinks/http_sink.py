@@ -52,6 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from scio_db_spark.schemas import (
+    KO_RESPONSE_BODY,
     NOT_HTTP_RESPONSE_ID,
     SENT_OR_DUPLICATED,
     struct_ddl,
@@ -62,8 +63,6 @@ RESPONSE_FIELDS = (
     "resp_id int, resp_title string, resp_body string, "
     "resp_user_id int, nhub_success boolean, send_latency_ms long"
 )
-
-_KO_BODY = "ko"  # koNotificationResponse, MyHttpResponse.scala:13-14
 
 # Fixed send settings (application.conf:22-31 analogues): sender
 # threads per Python worker, the connect/read deadline of each request
@@ -253,7 +252,7 @@ def send_one(
                     {
                         "id": NOT_HTTP_RESPONSE_ID,
                         "title": "",
-                        "body": _KO_BODY,
+                        "body": KO_RESPONSE_BODY,
                         "userId": payload.get("userId"),
                     },
                     attempt,

@@ -30,8 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from scio_db_spark.operators.dedup import SENT
-from scio_db_spark.schemas import SENT_OR_DUPLICATED, struct_ddl
+from scio_db_spark.schemas import SENT, SENT_OR_DUPLICATED, struct_ddl
 
 _STATE_SCHEMA = "last_us long, sid long"
 

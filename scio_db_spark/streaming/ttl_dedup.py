@@ -57,9 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from scio_db_spark.operators.keying import KEY_COL
-from scio_db_spark.schemas import SENT_OR_DUPLICATED, struct_ddl
-
-SENT = "SENT"
+from scio_db_spark.schemas import SENT, SENT_OR_DUPLICATED, struct_ddl
 
 _STATE_SCHEMA = "first_sent_ms long"
 BATCH_TS = "__batch_ts"

@@ -196,16 +196,38 @@ def test_workers_fork_from_patched_daemon(spark):
     assert [(r.patched, r.reads) for r in rows] == [(True, 0), (True, 0)]
 
 
+_REPO = os.path.dirname(os.path.dirname(_MODULE))
+
+
+def _driver(script: str, **kwargs) -> str:
+    """Run ``script`` as a driver in a fresh interpreter; its stdout."""
+    return subprocess.run(
+        [sys.executable, "-c", script],
+        capture_output=True,
+        text=True,
+        timeout=300,
+        check=True,
+        **kwargs,
+    ).stdout
+
+
 def test_live_session_without_daemon_conf_keeps_working():
     # A session someone else started without the conf: SessionFactory
-    # cannot change a static conf, so it raises nothing, returns that
-    # session, and its workers keep forking from pyspark's daemon.
+    # returns that session and names the core confs its context keeps,
+    # and its workers keep forking from pyspark's daemon.
     script = """
+import warnings
 import pandas as pd
 from pyspark.sql import SparkSession
-spark = SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
+spark = (SparkSession.builder.master("local[1]").config("spark.ui.enabled", "false")
+         .config("spark.driver.memory", "1g").getOrCreate())
 from scio_db_spark.session import SessionFactory
-same = SessionFactory.create("live") is spark
+with warnings.catch_warnings(record=True) as caught:
+    warnings.simplefilter("always")
+    same = SessionFactory.create("live") is spark
+for w in caught:
+    print("WARNING", w.category.__name__, w.message)
+print("PARTITIONS", spark.conf.get("spark.sql.shuffle.partitions"))
 def module(it):
     import zipimport
     for _ in it:
@@ -214,14 +236,31 @@ def module(it):
 rows = spark.range(1).mapInPandas(module, "m string").collect()
 print(same, spark.sparkContext.getConf().get("spark.python.daemon.module"), rows[0].m)
 """
-    repo = os.path.dirname(os.path.dirname(_MODULE))
-    out = subprocess.run(
-        [sys.executable, "-c", script],
-        cwd=repo,
-        env=dict(os.environ, PYTHONPATH=repo),
-        capture_output=True,
-        text=True,
-        timeout=300,
-        check=True,
-    ).stdout
-    assert out.strip().splitlines()[-1] == "True None zipimport"
+    lines = _driver(
+        script, cwd=_REPO, env=dict(os.environ, PYTHONPATH=_REPO)
+    ).strip().splitlines()
+    assert lines[-1] == "True None zipimport"
+    assert "PARTITIONS 32" in lines
+    warned = [line for line in lines if line.startswith("WARNING ")]
+    assert len(warned) == 1 and warned[0].startswith("WARNING RuntimeWarning ")
+    assert "spark.driver.memory='1g'" in warned[0]
+    assert "spark.python.daemon.module=None" in warned[0]
+    assert "spark.sql.shuffle.partitions" not in warned[0]
+
+
+def test_workers_import_package_from_any_directory(tmp_path):
+    # A driver started outside the checkout, which it only has on its
+    # own sys.path (the tools/ bootstrap): the daemon and the UDF still
+    # find scio_db_spark in the workers.
+    script = f"""
+import sys
+sys.path.insert(0, {_REPO!r})
+from scio_db_spark.session import SessionFactory
+spark = SessionFactory.create(master="local[2]")
+def passthrough(it):
+    yield from it
+print("COUNT", spark.range(4, numPartitions=2).mapInPandas(passthrough, "id long").count())
+"""
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = _driver(script, cwd=tmp_path, env=env)
+    assert out.strip().splitlines()[-1] == "COUNT 4"
