@@ -260,14 +260,9 @@ class SinkThrottleConfig:
     packaged value binds.
     """
 
-    max_open_requests: int = 20000
-    max_open_connection: int = 20000
     initial_timeout: int = 30
-    completion_timeout: int = 60
-    buffer: int = 20000
     throttle_requests: int = 1000
     throttle_per_second: int = 1
-    throttle_burst: int = 1000
 
 
 @dataclass
@@ -279,7 +274,6 @@ class MediationConfig:
     initial_load_bers_days: int = 0
     ber_window: int = 60
     ttl_time: int = 120
-    http_client_type: str = "python"
     endpoint: EndpointConfig = field(default_factory=EndpointConfig)
     akka: SinkThrottleConfig = field(default_factory=SinkThrottleConfig)
 

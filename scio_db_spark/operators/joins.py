@@ -90,8 +90,7 @@ def interval_join(
     ``[left_time - lower, left_time + upper]`` for equal keys — the
     impression/click correlation shape. The reference has no
     stream-stream join (its only joins are side-input lookups, J1-J5);
-    this exposes Spark's native one so the engine's streaming surface
-    is complete.
+    this is the engine's stream-stream join, Spark's native one.
 
     Both sides get ``withWatermark`` (a no-op under batch execution, so
     the same plan is unit-testable on static frames): the watermark plus

@@ -12,8 +12,7 @@ float anywhere, the streaming/anomaly.py policy.
 
 Scale: state is cardinality-bounded (3 ints per key), hash-
 partitioned in the state store, and kept for every key ever seen (no
-timeout, as in scd2.py and kmv_stream.py): a key's drift statistic
-never restarts.
+timeout): a key's drift statistic never restarts.
 
 Overflow posture: P is a signed sum of (value - target) cents; a key
 needs ~9e18 / |typical d| rows to overflow int64 (state.update then

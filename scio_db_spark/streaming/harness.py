@@ -28,44 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
 
-def _stage_one_file(spark, rows, schema, input_dir: str) -> None:
-    """Write rows as ONE parquet file into a monitored dir (the file
-    source doesn't recurse into the directory a DataFrame write
-    creates, hence the staging-dir + rename)."""
-    df = spark.createDataFrame(rows, schema)
-    staging = tempfile.mkdtemp(prefix="stream_stage_")
-    df.coalesce(1).write.mode("overwrite").parquet(staging)
-    part = next(
-        f for f in os.listdir(staging)
-        if f.startswith("part-") and f.endswith(".parquet")
-    )
-    os.rename(
-        os.path.join(staging, part),
-        os.path.join(input_dir, f"batch_{uuid.uuid4().hex}.parquet"),
-    )
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-def _run_available_now(
-    out: DataFrame, output_mode: str, checkpoint_dir: str, collected: list
-) -> list:
-    """One Trigger.AvailableNow pass of ``out`` into ``collected``;
-    returns the pass's ``recentProgress``."""
-
-    def _sink(batch_df: DataFrame, _epoch: int) -> None:
-        collected.extend(batch_df.collect())
-
-    query = (
-        out.writeStream.foreachBatch(_sink)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query.recentProgress
-
-
 class StreamHarness:
     """Drives a streaming transform micro-batch by micro-batch.
 
@@ -98,22 +60,46 @@ class StreamHarness:
         self._output_mode = output_mode
 
     def _run_pass(self) -> list:
+        """One Trigger.AvailableNow pass into the collected rows;
+        returns the pass's ``recentProgress``."""
         stream = (
             self.spark.readStream.schema(self.schema)
             .option("maxFilesPerTrigger", "1")  # one file = one micro-batch
             .parquet(self.input_dir)
         )
-        return _run_available_now(
-            self._transform(stream),
-            self._output_mode,
-            self.checkpoint_dir,
-            self._collected,
+
+        def _sink(batch_df: DataFrame, _epoch: int) -> None:
+            self._collected.extend(batch_df.collect())
+
+        query = (
+            self._transform(stream)
+            .writeStream.foreachBatch(_sink)
+            .outputMode(self._output_mode)
+            .option("checkpointLocation", self.checkpoint_dir)
+            .trigger(availableNow=True)
+            .start()
         )
+        query.awaitTermination()
+        return query.recentProgress
 
     def add_batch(self, rows: list, wait: bool = True) -> list | None:
         """Stage ``rows`` as one file; with ``wait``, run a pass over it
         and return that pass's ``recentProgress``."""
-        _stage_one_file(self.spark, rows, self.schema, self.input_dir)
+        # One parquet file into the monitored dir: the file source does
+        # not recurse into the directory a DataFrame write creates,
+        # hence the staging dir + rename.
+        df = self.spark.createDataFrame(rows, self.schema)
+        staging = tempfile.mkdtemp(prefix="stream_stage_")
+        df.coalesce(1).write.mode("overwrite").parquet(staging)
+        part = next(
+            f for f in os.listdir(staging)
+            if f.startswith("part-") and f.endswith(".parquet")
+        )
+        os.rename(
+            os.path.join(staging, part),
+            os.path.join(self.input_dir, f"batch_{uuid.uuid4().hex}.parquet"),
+        )
+        shutil.rmtree(staging, ignore_errors=True)
         return self._run_pass() if wait else None
 
     def process_pending(self) -> None:
@@ -130,67 +116,4 @@ class StreamHarness:
         # state — dozens of streaming tests would otherwise accumulate
         # hundreds of dirs per CI run).
         shutil.rmtree(self.input_dir, ignore_errors=True)
-        shutil.rmtree(self.checkpoint_dir, ignore_errors=True)
-
-
-class DualStreamHarness:
-    """Two-input variant for stream-stream transforms (joins).
-
-    Same start/stop + availableNow-pass model as ``StreamHarness``;
-    ``add_batches(left_rows, right_rows)`` delivers one micro-batch
-    containing the given rows on each side (either may be empty) and
-    runs it to completion against the shared checkpoint, so join
-    state and watermarks persist across calls exactly as across
-    micro-batches of a long-running query.
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        left_schema: StructType | str,
-        right_schema: StructType | str,
-    ):
-        self.spark = spark
-        self._schemas = (left_schema, right_schema)
-        self._input_dirs = (
-            tempfile.mkdtemp(prefix="stream_in_l_"),
-            tempfile.mkdtemp(prefix="stream_in_r_"),
-        )
-        self.checkpoint_dir = tempfile.mkdtemp(prefix="stream_ck2_")
-        self._transform = None
-        self._collected: list = []
-
-    def start(self, transform, output_mode: str = "append") -> None:
-        self._transform = transform
-        self._output_mode = output_mode
-
-    def add_batches(self, left_rows: list, right_rows: list) -> None:
-        # Stage both sides' files first, then ONE pass consumes them
-        # together (maxFilesPerTrigger=1 per side keeps it one file
-        # each; an empty side simply contributes no rows this batch).
-        for rows, schema, d in zip(
-            (left_rows, right_rows), self._schemas, self._input_dirs
-        ):
-            if rows:
-                _stage_one_file(self.spark, rows, schema, d)
-        l_stream, r_stream = (
-            self.spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(d)
-            for schema, d in zip(self._schemas, self._input_dirs)
-        )
-        _run_available_now(
-            self._transform(l_stream, r_stream),
-            self._output_mode,
-            self.checkpoint_dir,
-            self._collected,
-        )
-
-    def results(self) -> list:
-        return list(self._collected)
-
-    def stop(self) -> None:
-        self._transform = None
-        for d in self._input_dirs:
-            shutil.rmtree(d, ignore_errors=True)
         shutil.rmtree(self.checkpoint_dir, ignore_errors=True)

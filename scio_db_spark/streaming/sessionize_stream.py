@@ -1,7 +1,7 @@
 """Streaming TTL-gap sessionization — the stateful twin of
 ``operators/dedup.py::ttl_sessionize`` (D2's batch analogue), with the
-bit-equality contract the other streaming twins carry (scd2, cusum):
-a stream fed the same rows in the same per-key order assigns the SAME
+bit-equality contract the cusum twin carries: a stream fed the same
+rows in the same per-key order assigns the SAME
 session ids and send statuses as the batch window form, regardless of
 where micro-batch boundaries fall (pinned in
 tests/test_sessionize_stream.py).
@@ -15,9 +15,9 @@ divisions and subtraction rather than an integer-microsecond compare
 that could disagree at the boundary ulp.
 
 Scale: state is cardinality-bounded (2 ints/key), hash-partitioned in
-the state store, and kept for every key ever seen (no timeout, as in
-scd2.py and kmv_stream.py), so session ids keep counting from the
-key's whole history, as the batch form's do.
+the state store, and kept for every key ever seen (no timeout), so
+session ids keep counting from the key's whole history, as the batch
+form's do.
 """
 
 from __future__ import annotations

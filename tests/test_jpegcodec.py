@@ -105,6 +105,24 @@ def test_color_roundtrip_bounded():
     assert err.max() <= 3 and err.mean() < 1
 
 
+def test_color_roundtrip_keeps_dhash():
+    """The lossy color roundtrip moves the perceptual fingerprint by at
+    most 6 of its 64 bits, so near-dup matching survives re-encoding."""
+    from scio_db_spark.functions.jpegcodec import (
+        jpeg_decode,
+        jpeg_encode_rgb,
+    )
+    from scio_db_spark.functions.multimodal import dhash64_from_pixels
+
+    img = np.random.RandomState(29).randint(0, 256, (16, 24, 3)).astype(
+        np.uint8
+    )
+    rt = jpeg_decode(jpeg_encode_rgb(img))
+    diff = dhash64_from_pixels(rt) ^ dhash64_from_pixels(img)
+    ham = bin(diff & ((1 << 64) - 1)).count("1")
+    assert ham <= 6
+
+
 def test_color_odd_dims_and_structure():
     from scio_db_spark.functions.jpegcodec import (
         jpeg_decode,

@@ -1,9 +1,14 @@
 """KMV bottom-k sketch laws: estimator accuracy against the embedded
-exact twin, bounded sketch size, and determinism (md5 hashing — no
-sampling seed anywhere)."""
+exact twin, bounded sketch size, determinism (md5 hashing — no
+sampling seed anywhere), and the census integers reproduced from the
+day sketches by a plain-Python reference estimator."""
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
+
+from scio_db_spark.functions.hashing import str_hash60
+from scio_db_spark.plans.mediation import _KMV_K, _KMV_SCALE
 from scio_db_spark.plans.registry import all_queries
 
 
@@ -39,3 +44,53 @@ def test_sketch_laws(spark):
         assert r.union_est >= r.k_used or r.k_used < 128
         # intersection can never exceed union
         assert r.inter_est <= r.union_est
+
+
+def _kmv_pair_estimate(ks_a, ks_b):
+    """Reference: union / Jaccard-numerator / intersection estimates
+    of two bottom-k sketches with the census's integer arithmetic
+    (same floor divisions)."""
+    k = _KMV_K
+    merged = sorted(set(ks_a) | set(ks_b))
+    union_k = merged[:k]
+    k_used = min(k, len(merged))
+    sa, sb = set(ks_a), set(ks_b)
+    jac_num = sum(1 for x in union_k if x in sa and x in sb)
+    if len(merged) >= k:
+        union_est = ((k - 1) * _KMV_SCALE) // merged[k - 1]
+    else:
+        union_est = len(merged)
+    inter_est = (jac_num * union_est) // max(k_used, 1)
+    return {
+        "k_used": k_used,
+        "jac_num": jac_num,
+        "union_est": union_est,
+        "inter_est": inter_est,
+    }
+
+
+def test_pair_estimator_reproduces_registered_census(spark, sf_dir):
+    """Feed the census's own day sketches to the plain-Python
+    reference estimator: every reported integer must match the
+    registered query's columns."""
+    from scio_db_spark.plans.catalog import table
+
+    e = table(spark, sf_dir, "events")
+    dh = e.select(
+        F.to_date("ts").cast("string").alias("day"),
+        str_hash60(F.col("user_id").cast("string")).alias("h"),
+    ).distinct()
+    sketches = {
+        r.day: sorted(r.hs)[:_KMV_K]
+        for r in dh.groupBy("day")
+        .agg(F.collect_set("h").alias("hs"))
+        .collect()
+    }
+    census = _rows(spark, sf_dir)
+    assert census
+    for r in census[:50]:
+        est = _kmv_pair_estimate(sketches[r.day_a], sketches[r.day_b])
+        assert est["k_used"] == r.k_used, (r.day_a, r.day_b)
+        assert est["jac_num"] == r.jac_num
+        assert est["union_est"] == r.union_est
+        assert est["inter_est"] == r.inter_est

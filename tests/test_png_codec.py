@@ -52,6 +52,33 @@ def test_corrupt_crc_raises():
         png_decode_rgb8(bytes(b))
 
 
+def test_valid_crc_garbage_idat_raises_zlib_error():
+    """Every chunk CRC is correct but the IDAT body is not a DEFLATE
+    stream (a buggy encoder, or a bit flip made before the CRC was
+    stamped): the codec raises ``zlib.error``, not ``ValueError``, so a
+    caller routing bad payloads must catch both."""
+    import struct
+    import zlib
+
+    def chunk(ctype: bytes, data: bytes) -> bytes:
+        return (
+            struct.pack(">I", len(data))
+            + ctype
+            + data
+            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
+        )
+
+    ihdr = struct.pack(">IIBBBBB", 2, 2, 8, 2, 0, 0, 0)  # 2x2 RGB8
+    b = (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", b"\xff\x00\xde\xad\xbe\xef")
+        + chunk(b"IEND", b"")
+    )
+    with pytest.raises(zlib.error):
+        png_decode_rgb8(b)
+
+
 def test_unsupported_depth_named_not_misparsed():
     b = bytearray(png_encode_rgb8(_img(4, 4, 3)))
     # IHDR data starts at offset 16; depth byte is at 16+8
