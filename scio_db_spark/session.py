@@ -83,6 +83,13 @@ _SCALE_DEFAULTS: dict[str, str] = {
 }
 
 
+def _qualified(spark: SparkSession, path: str) -> str:
+    """``path`` qualified by its Hadoop file system, as Spark does."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs.makeQualified(jpath).toString()
+
+
 class SessionFactory:
     """Builds configured SparkSessions (the engine's single entry point)."""
 
@@ -124,6 +131,9 @@ class SessionFactory:
                     now = spark.conf.get(k, None)
                 else:
                     now = running.get(k)
+                if k == "spark.sql.warehouse.dir":
+                    # Stored qualified: /tmp/wh reads back file:/tmp/wh.
+                    v = _qualified(spark, v)
                 if now != v:
                     kept.append(f"{k}={now!r} (requested {v!r})")
             if kept:

@@ -20,10 +20,15 @@ and ``http/StateAsyncParDoWithHttpHandler.scala:86-95,105-164``) on
 
 The reference also seeds its state with ``INITIAL_LOAD_`` rows so that
 already-notified records are never sent (D3,
-StateAsyncParDoWithHttpHandler.scala:111-113,133-145). Here the J1
-anti-join against the historical key set does that upstream of this
-gate (``build_mediation_core``), so the gate's state holds live sends
-only.
+StateAsyncParDoWithHttpHandler.scala:111-113,133-145). Here the gate
+probes a sorted historical key file instead (J1): the driver writes
+the distinct historical keys once (``ship_historical_keys``), each
+Python worker maps the file once, and a key with no live state that is
+found there yields no row and writes no state. The probe is exact
+(``np.searchsorted`` plus an equality check). Each key is stored as its
+UTF-8 bytes plus a trailing 0xFF byte, which never occurs in UTF-8, so
+NumPy's stripping of trailing NUL bytes from fixed-width values cannot
+make two keys equal. The gate's state holds live sends only.
 
 One state implementation, ``applyInPandasWithState`` (SURVEY.md §2.5),
 and one clean-up for every trigger. The contract needs no per-key timer:
@@ -46,12 +51,20 @@ and clean-up bounds state to the keys sent within TTL plus delay.
 
 from __future__ import annotations
 
+import functools
+import hashlib
+import os
 import time
 from collections.abc import Iterator
 from typing import Any
 
+import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
+from py4j.protocol import Py4JError
 
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -62,6 +75,92 @@ from scio_db_spark.schemas import SENT, SENT_OR_DUPLICATED, struct_ddl
 _STATE_SCHEMA = "first_sent_ms long"
 BATCH_TS = "__batch_ts"
 _MAX_DELAY_MS = 3_600_000
+_KEY_END = b"\xff"  # never occurs in UTF-8
+
+# Key files this driver shipped: (application id, input files) ->
+# [(historical plan, file name)].
+_SHIPPED: dict[tuple, list[tuple[DataFrame, str | None]]] = {}
+
+
+def _input_files(df: DataFrame) -> tuple | None:
+    """Spark's own listing of the files ``df`` reads, (path, length,
+    modification time) each, taken from the file indexes of its plan;
+    None when a leaf of the plan is not a file relation or no file is
+    read."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    files = []
+    for i in range(leaves.size()):
+        try:
+            statuses = leaves.apply(i).relation().location().allFiles()
+        except Py4JError:
+            return None
+        for j in range(statuses.size()):
+            st = statuses.apply(j)
+            files.append(
+                (st.getPath().toString(), st.getLen(),
+                 st.getModificationTime())
+            )
+    return tuple(sorted(files)) or None
+
+
+def _sorted_keys(keys: pa.ChunkedArray) -> np.ndarray:
+    """Distinct keys as a sorted fixed-width array of UTF-8 + 0xFF."""
+    ended = pc.binary_join_element_wise(
+        keys.drop_null().cast(pa.binary()),
+        pa.scalar(_KEY_END),
+        pa.scalar(b""),
+    )
+    width = pc.max(pc.binary_length(ended)).as_py() or 1
+    return np.unique(ended.to_numpy().astype(f"S{width}"))
+
+
+def ship_historical_keys(historical_df: DataFrame) -> str | None:
+    """Write the distinct ``idempotent_key`` values of ``historical_df``
+    to a sorted key file and ship it to the workers with
+    ``SparkContext.addFile``; returns its name, None for an empty set.
+
+    The file is named by a hash of its content and written under the
+    session's local dir (``spark.local.dir`` / ``SPARK_LOCAL_DIRS``),
+    which Spark removes when the JVM exits. The result is memoised per
+    SparkContext: a plan with the same semantics over the same files
+    (path, length and modification time, from Spark's listing of the
+    plan) gets the shipped file back without running a Spark job. A
+    plan that reads no files is built afresh every time."""
+    sc = historical_df.sparkSession.sparkContext
+    files = _input_files(historical_df)
+    memo = _SHIPPED.setdefault((sc.applicationId, files), []) if files else []
+    for plan, name in memo:
+        if plan.sameSemantics(historical_df):
+            return name
+    keys = _sorted_keys(historical_df.select(KEY_COL).toArrow().column(0))
+    name = None
+    if len(keys):
+        digest = hashlib.sha256(keys.dtype.str.encode() + keys.tobytes())
+        name = f"historical-keys-{digest.hexdigest()[:24]}.npy"
+        path = os.path.join(
+            os.path.dirname(SparkFiles.getRootDirectory()), name
+        )
+        if not os.path.exists(path):
+            np.save(path + ".tmp.npy", keys)
+            os.replace(path + ".tmp.npy", path)
+        sc.addFile(path)
+    memo.append((historical_df, name))
+    return name
+
+
+@functools.cache
+def _historical_keys(name: str) -> np.ndarray:
+    """The shipped key file ``name``, mapped once per Python worker (a
+    module function, so the gate's closure pickles a reference to it)."""
+    return np.load(SparkFiles.get(name), mmap_mode="r")
+
+
+def _is_historical(keys: np.ndarray, key: str) -> bool:
+    probe = key.encode() + _KEY_END
+    if len(probe) > keys.dtype.itemsize:
+        return False
+    i = int(np.searchsorted(keys, probe))
+    return i < len(keys) and keys[i] == probe
 
 
 def stamp_batch_clock(df: DataFrame, ttl_ms: int | None) -> DataFrame:
@@ -97,9 +196,8 @@ def _apply_ttl_gate(
     sort would let a later chunk hold the globally first-ordered row
     while an earlier chunk gets the SENT mark. Memory is bounded by one
     key's rows in one micro-batch — the same bound as the reference's
-    per-key BagState (MediationService pairs it with a pre-state
-    ``distinctByKey``; see build_mediation_core, which anti-joins
-    historical keys upstream for the same pressure relief).
+    per-key BagState. Historical keys never get here: the caller probes
+    them first and drops the whole group (``_make_dedup_fn``).
 
     Pathological hot key (one key flooding a micro-batch): the bound
     degrades to that batch's row count for the key. Mitigations, in
@@ -130,7 +228,12 @@ def _apply_ttl_gate(
     return out, first_sent
 
 
-def _make_dedup_fn(ttl_ms: int, order_cols: list[str] | None, clock_ms=None):
+def _make_dedup_fn(
+    ttl_ms: int,
+    order_cols: list[str] | None,
+    clock_ms=None,
+    historical_keys: str | None = None,
+):
     clock_ms = clock_ms or (lambda: int(time.time() * 1000))
 
     def dedup_fn(
@@ -147,6 +250,16 @@ def _make_dedup_fn(ttl_ms: int, order_cols: list[str] | None, clock_ms=None):
             # Deadline passed but the watermark has not reached it yet
             # (a key with data is never timed out) — expire inline.
             first_sent = None
+        if (
+            first_sent is None
+            and historical_keys is not None
+            and key[0] is not None
+            and _is_historical(_historical_keys(historical_keys), key[0])
+        ):
+            # D3: already notified — no row, no state.
+            if state.exists:
+                state.remove()
+            return
         chunks = [pdf for pdf in pdfs if len(pdf)]
         out, first_sent = _apply_ttl_gate(chunks, first_sent, now, order_cols)
         if out is not None:
@@ -165,9 +278,13 @@ def ttl_dedup(
     ttl_seconds: float,
     order_cols: list[str] | None = None,
     clock_ms=None,
+    historical_keys: str | None = None,
 ) -> DataFrame:
     """Apply the TTL dedup gate to a streaming DataFrame keyed by
     ``idempotent_key``; the output is in update mode.
+
+    ``historical_keys`` names a key file from ``ship_historical_keys``:
+    a key with no live state that is in it is dropped (D3).
 
     The output is the input columns (every field nullable) plus
     ``send_status string``. ``clock_ms`` is injectable for
@@ -181,7 +298,9 @@ def ttl_dedup(
     return (
         stamped.groupBy(KEY_COL)
         .applyInPandasWithState(
-            func=_make_dedup_fn(ttl_ms, order_cols, clock_ms),
+            func=_make_dedup_fn(
+                ttl_ms, order_cols, clock_ms, historical_keys
+            ),
             outputStructType=struct_ddl(stamped.schema, "send_status string"),
             stateStructType=_STATE_SCHEMA,
             outputMode="update",

@@ -2,8 +2,9 @@
 
 The Spark analogue of the reference's flagship spec
 (MediationServiceSpec.scala:45-83): deterministic micro-batches through
-validate → key → historical anti-join → stateful TTL dedup, asserting
-the full routing contract.
+validate → key → stateful TTL dedup with its historical-key probe,
+asserting the full routing contract, and the driver-side memo that
+ships the historical key file once per set of input files.
 """
 
 from __future__ import annotations
@@ -30,7 +31,7 @@ def _ber(tx, nid, cid, msg="m", ts=1.0):
 
 
 def test_mediation_core_end_to_end(spark):
-    # Historical: key tx0-9 was already notified (J1 anti-join drop).
+    # Historical: key tx0-9 was already notified (J1: the gate drops it).
     hist = spark.createDataFrame([Row(idempotent_key="tx0-9")])
 
     h = StreamHarness(spark, FLAT)
@@ -54,7 +55,7 @@ def test_mediation_core_end_to_end(spark):
         by_key.setdefault(r.idempotent_key, []).append(r.send_status)
     assert sorted(by_key["tx1-1"]) == ["SENT", "SENT_OR_DUPLICATED"]
     assert by_key["tx3-3"] == ["SENT"]
-    assert "tx0-9" not in by_key          # dropped by anti-join
+    assert "tx0-9" not in by_key          # dropped by the gate's probe
     assert not any(k.startswith("n2") for k in by_key)  # invalid not sent
 
     # Second batch: tx1-1 still inside TTL -> duplicate.
@@ -163,12 +164,31 @@ def test_rebuild_over_changed_historical_dir_drops_new_key(
     assert _sent(rows) == [("tx1-1", "SENT"), ("tx8-8", "SENT")]
 
 
+def test_invalid_row_with_historical_key_reaches_ko(spark):
+    hist = spark.createDataFrame([Row(idempotent_key="tx0-9")])
+    h = StreamHarness(spark, FLAT)
+    h.start(
+        lambda s: build_mediation_core(
+            s, historical_df=hist, ttl_seconds=3600,
+        )["ko"]
+    )
+    try:
+        h.add_batch([_ber("tx0", None, "9"), _ber("tx0", "n0", "9")])
+        rows = h.results()
+    finally:
+        h.stop()
+    assert [(r.idempotent_key, r.notification_id) for r in rows] == [
+        ("tx0-9", None)
+    ]
+
+
 @pytest.mark.parametrize("threshold", [None, "-1"])
 def test_size_statistics_pick_the_historical_join(spark, tmp_path, threshold):
-    """The measured size of the cached key set picks the join: broadcast
-    under the session's default threshold, shuffle with broadcasting
-    off. Both drop the same rows, and neither micro-batch plan scans
-    the historical files."""
+    """The size statistics of the historical set pick no join any more:
+    under the session's default broadcast threshold and with
+    broadcasting off alike, the micro-batch plan has no join, no
+    broadcast, no cached relation and no scan of the historical files;
+    the gate still drops the historical keys."""
     hist_dir = tmp_path / "hist"
     _hist(spark, hist_dir, "tx0-9", "tx5-5")
     key = "spark.sql.autoBroadcastJoinThreshold"
@@ -198,21 +218,44 @@ def test_size_statistics_pick_the_historical_join(spark, tmp_path, threshold):
             .start()
         )
         query.awaitTermination()
-        plan = query._jsq.explainInternal(False)
-        # The cached set's own plan prints under InMemoryTableScan, so
-        # look for scans among the leaves of the micro-batch plan.
-        leaves = (
+        plan = (
             query._jsq.streamingQuery().lastExecution().executedPlan()
-            .collectLeaves()
+            .toString()
         )
-        scans = [
-            leaves.apply(i).simpleString(100) for i in range(leaves.size())
-        ]
     finally:
         spark.conf.set(key, default)
         h.stop()
 
     assert _sent(out) == [("tx1-1", "SENT")]
-    assert ("BroadcastExchange" in plan) == (threshold is None)
-    assert any(scan.startswith("InMemoryTableScan") for scan in scans)
-    assert not any(str(hist_dir) in scan for scan in scans)
+    for node in ("Join", "BroadcastExchange", "InMemoryTableScan"):
+        assert node not in plan
+    assert str(hist_dir) not in plan
+
+
+def _jobs(spark):
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
+def test_rebuild_over_unchanged_files_ships_nothing_new(spark, tmp_path):
+    """The key file is built once per set of historical files: a rebuild
+    over a fresh read of the same files runs no Spark job and ships no
+    file; a file added to the directory ships a new key file. (Key
+    files are named by content, so the keys are this test's own.)"""
+    hist_dir = tmp_path / "hist"
+    _hist(spark, hist_dir, "memo-1")
+    (tmp_path / "in").mkdir()
+    stream = spark.readStream.schema(FLAT).parquet(str(tmp_path / "in"))
+    build_mediation_core(stream, historical_df=spark.read.parquet(str(hist_dir)))
+    sc = spark.sparkContext
+
+    fresh = spark.read.parquet(str(hist_dir))
+    jobs, shipped = _jobs(spark), set(sc.listFiles)
+    build_mediation_core(stream, historical_df=fresh)
+    assert _jobs(spark) == jobs
+    assert set(sc.listFiles) == shipped
+
+    _hist(spark, hist_dir, "memo-2")
+    build_mediation_core(
+        stream, historical_df=spark.read.parquet(str(hist_dir))
+    )
+    assert len(set(sc.listFiles) - shipped) == 1

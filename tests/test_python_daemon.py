@@ -248,6 +248,33 @@ print(same, spark.sparkContext.getConf().get("spark.python.daemon.module"), rows
     assert "spark.sql.shuffle.partitions" not in warned[0]
 
 
+def test_live_session_same_warehouse_dir_is_not_named(tmp_path):
+    # Spark stores the warehouse dir qualified (file:/...): asking a
+    # live session again for the same path names nothing, and asking
+    # for another path names the conf.
+    script = f"""
+import warnings
+from scio_db_spark.session import SessionFactory
+conf = {{"spark.ui.enabled": "false"}}
+for wh in ("wh1", "wh1", "wh2"):
+    conf["spark.sql.warehouse.dir"] = {str(tmp_path)!r} + "/" + wh
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        SessionFactory.create("live", master="local[1]", extra_conf=conf)
+    print("WARNED", wh, len(caught), *(w.message for w in caught))
+"""
+    lines = [
+        line for line in _driver(
+            script, cwd=_REPO, env=dict(os.environ, PYTHONPATH=_REPO)
+        ).splitlines()
+        if line.startswith("WARNED ")
+    ]
+    assert lines[:2] == ["WARNED wh1 0", "WARNED wh1 0"]
+    assert lines[2].startswith("WARNED wh2 1 SessionFactory: the running")
+    assert "spark.sql.warehouse.dir='file:" in lines[2]
+    assert lines[2].count("=") == 1
+
+
 def test_workers_import_package_from_any_directory(tmp_path):
     # A driver started outside the checkout, which it only has on its
     # own sys.path (the tools/ bootstrap): the daemon and the UDF still

@@ -9,8 +9,10 @@ micro-batches through the file-drop harness, asserting
   an ``availableNow`` trigger too (W5 timer-clear semantics).
 
 Already-notified records (the reference's INITIAL_LOAD_ seed, D3) are
-suppressed upstream by the J1 historical anti-join; see
-test_mediation_pipeline.py.
+dropped inside the gate: a key with no live state is probed in the
+shipped historical key file, and a hit yields no row and no state (the
+probe's exactness tests below; the pipeline wiring in
+test_mediation_pipeline.py).
 """
 
 from __future__ import annotations
@@ -27,7 +29,7 @@ from pyspark.sql.types import (
 )
 
 from scio_db_spark.streaming.harness import StreamHarness
-from scio_db_spark.streaming.ttl_dedup import ttl_dedup
+from scio_db_spark.streaming.ttl_dedup import ship_historical_keys, ttl_dedup
 
 SCHEMA = StructType(
     [
@@ -238,3 +240,43 @@ def test_apply_ttl_gate_vectorized_hot_key_direct():
     assert counts["SENT_OR_DUPLICATED"] == n - 1
     assert out.iloc[0]["ts"] == 0  # SENT goes to the first-ordered row
     assert out.iloc[0]["send_status"] == "SENT"
+
+
+def _ship(spark, *keys):
+    return ship_historical_keys(
+        spark.createDataFrame([(k,) for k in keys], "idempotent_key string")
+    )
+
+
+def test_historical_probe_is_exact(spark, harness):
+    """D3: a key in the historical set yields no row and writes no
+    state; every other key is SENT, however close to a historical one.
+    Keys are stored with a trailing 0xFF byte, so NumPy's stripping of
+    trailing NUL bytes cannot make ``tx1-1`` equal ``tx1-1\\x00``."""
+    hist = _ship(spark, "tx0-9", "tx1-1\x00", "tx2-\u00e9", "w" * 40)
+    harness.start(
+        lambda s: ttl_dedup(s, ttl_seconds=3600, historical_keys=hist)
+    )
+    live = ["tx0-99", "tx0-", "tx0-9\x00", "tx0-9\u00e9", "tx1-1",
+            "tx2-e", "tx2-\u00e9\u00e9", "w" * 41]
+    progress = harness.add_batch(
+        [Row(idempotent_key=k, payload="p", ts=1.0)
+         for k in ["tx0-9", *live, "tx0-9", "tx2-\u00e9", "w" * 40]]
+    )
+    assert sorted(
+        (r.idempotent_key, r.send_status) for r in harness.results()
+    ) == sorted((k, "SENT") for k in live)
+    assert _state_ops(progress)[-1]["numRowsTotal"] == len(live)
+
+
+def test_empty_historical_set_drops_nothing(spark, harness):
+    hist = _ship(spark)
+    harness.start(
+        lambda s: ttl_dedup(s, ttl_seconds=3600, historical_keys=hist)
+    )
+    harness.add_batch(
+        [Row(idempotent_key=k, payload="p", ts=1.0) for k in ["a", "", "b"]]
+    )
+    assert sorted(
+        (r.idempotent_key, r.send_status) for r in harness.results()
+    ) == [("", "SENT"), ("a", "SENT"), ("b", "SENT")]
