@@ -5,10 +5,14 @@ Reference: ``MyEventRecordUtils.scala:15-25`` (``isBerValid`` = non-null
 ``MediationService.scala:233-251`` partitions the stream into
 (invalid → toxic sink, valid → mediation path).
 
-Implemented as two filters over one predicate: Catalyst pushes both down
-to the scan, and with one upstream cached/exchange-reused source this is
-a single pass at execution time. At 100 TB the toxic branch is typically
-<<1% of rows, so the KO scan cost is dominated by the shared read.
+``split_ok_ko`` is two filters over one predicate, so each branch is
+its own plan: it reads the source once only when the source is cached
+or both branches run in one job, as in the batch plans. A stream is
+not split: two streaming queries over the two branches would each
+list and read every input file. The mediation pipeline keeps one
+query instead; it flags each row with ``is_valid_ber`` and the TTL gate
+passes the invalid ones through as ``INVALID``
+(``streaming.mediation.build_mediation_core``).
 """
 
 from __future__ import annotations

@@ -89,6 +89,7 @@ HTTP_RESPONSE_SCHEMA = T.StructType(
 NOT_HTTP_RESPONSE_ID = 0
 SENT = "SENT"
 SENT_OR_DUPLICATED = "SENT_OR_DUPLICATED"
+INVALID = "INVALID"  # the TTL gate's status for a record bound for toxic/
 KO_RESPONSE_BODY = "ko"  # koNotificationResponse, MyHttpResponse.scala:13-14
 
 # Initial-load tag prefix (reference: MediationService.scala:57).

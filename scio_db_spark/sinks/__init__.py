@@ -8,7 +8,6 @@ from scio_db_spark.sinks.files import (
 )
 from scio_db_spark.sinks.http_sink import (
     classify_success,
-    http_notification_sink,
     send_http_batch,
     send_one,
     to_http_request,
@@ -22,7 +21,6 @@ __all__ = [
     "write_sharded",
     "write_windowed_batch",
     "classify_success",
-    "http_notification_sink",
     "send_http_batch",
     "send_one",
     "to_http_request",

@@ -6,9 +6,10 @@ retry ``http/StateAsyncParDoWithHttpHandler.scala:36-37,66-84``, error
 swallowing ``http/state/StateBaseAsyncDoFn.java:118-135``, throttle
 ``application.conf:22-31``) on Spark's execution model:
 
-- the micro-batch is the bundle (W7): ``foreachBatch`` drains every
-  in-flight request before the batch commits, which is exactly the
-  ``@FinishBundle`` flush of the reference;
+- the micro-batch is the bundle (W7): the ``foreachBatch`` body of
+  ``run_mediation_pipeline`` drains every in-flight request before the
+  batch commits, which is exactly the ``@FinishBundle`` flush of the
+  reference;
 - the send itself runs DISTRIBUTED via ``mapInPandas`` — each executor
   posts its own partition through its Python worker's sender pool, so
   throughput scales with executors instead of funneling through the
@@ -364,51 +365,3 @@ def send_http_batch(
             yield out
 
     return batch_df.mapInPandas(_send_partition, out_schema)
-
-
-def http_notification_sink(
-    stream_df: DataFrame,
-    url: str,
-    checkpoint: str,
-    analytics_path: str | None = None,
-    trigger: dict | None = None,
-    **send_kwargs,
-):
-    """K4 end-to-end: streaming HTTP sink with optional analytics out.
-
-    Each micro-batch posts distributed, then the (record, response)
-    pairs (P9, MediationService.scala:259-268) are either written to
-    ``analytics_path`` or just materialized (send-only, K7 disabled —
-    matching the reference where the analytics topic is commented off,
-    MediationService.scala:137-139).
-    """
-
-    # Epoch-partitioned overwrite, NOT a plain append: foreachBatch is
-    # at-least-once, and an epoch replay after a post-write failure
-    # would double-count the replayed (record, response) rows.
-    from scio_db_spark.sinks.files import idempotent_batch_writer
-
-    analytics_writer = (
-        idempotent_batch_writer(analytics_path)
-        if analytics_path is not None
-        else None
-    )
-
-    def _process(batch_df: DataFrame, epoch_id: int) -> None:
-        sent = send_http_batch(batch_df, url, **send_kwargs)
-        if analytics_writer is not None:
-            analytics_writer(sent, epoch_id)
-        else:
-            # force the sends, keep nothing
-            sent.write.format("noop").mode("overwrite").save()
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_process)
-        # update, not the default append, which Spark rejects for the
-        # update-mode state output of ttl_dedup
-        .outputMode("update")
-        .option("checkpointLocation", checkpoint)
-    )
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()

@@ -30,6 +30,14 @@ UTF-8 bytes plus a trailing 0xFF byte, which never occurs in UTF-8, so
 NumPy's stripping of trailing NUL bytes from fixed-width values cannot
 make two keys equal. The gate's state holds live sends only.
 
+Invalid records ride the same gate (``valid_col``), as the reference's
+one pipeline tags its KO output (MediationService.scala:124-131): each
+row whose validity flag is not true comes out once, under ``INVALID``,
+whatever the key's state. It reads and writes no state, gets no probe,
+and never decides the status of a valid row with the same key. A visit
+that brings only invalid rows re-arms the key's timeout on its stored
+deadline, so the key keeps its state and its TTL.
+
 One state implementation, ``applyInPandasWithState`` (SURVEY.md §2.5),
 and one clean-up for every trigger. The contract needs no per-key timer:
 the deadline is re-derived from the first-send time on every visit, and
@@ -70,7 +78,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from scio_db_spark.operators.keying import KEY_COL
-from scio_db_spark.schemas import SENT, SENT_OR_DUPLICATED, struct_ddl
+from scio_db_spark.schemas import INVALID, SENT, SENT_OR_DUPLICATED, struct_ddl
 
 _STATE_SCHEMA = "first_sent_ms long"
 BATCH_TS = "__batch_ts"
@@ -196,8 +204,9 @@ def _apply_ttl_gate(
     sort would let a later chunk hold the globally first-ordered row
     while an earlier chunk gets the SENT mark. Memory is bounded by one
     key's rows in one micro-batch — the same bound as the reference's
-    per-key BagState. Historical keys never get here: the caller probes
-    them first and drops the whole group (``_make_dedup_fn``).
+    per-key BagState. Neither invalid rows nor historical keys get here:
+    the caller sets the former apart and probes the latter first,
+    dropping their valid rows (``_make_dedup_fn``).
 
     Pathological hot key (one key flooding a micro-batch): the bound
     degrades to that batch's row count for the key. Mitigations, in
@@ -228,11 +237,28 @@ def _apply_ttl_gate(
     return out, first_sent
 
 
+def _split_invalid(
+    chunks: list[pd.DataFrame], valid_col: str
+) -> tuple[list[pd.DataFrame], list[pd.DataFrame]]:
+    """``(valid, invalid)`` row chunks; a null flag is invalid."""
+    valid, invalid = [], []
+    for pdf in chunks:
+        ok = pdf[valid_col].eq(True)
+        if ok.all():
+            valid.append(pdf)
+            continue
+        if ok.any():
+            valid.append(pdf[ok])
+        invalid.append(pdf[~ok])
+    return valid, invalid
+
+
 def _make_dedup_fn(
     ttl_ms: int,
     order_cols: list[str] | None,
     clock_ms=None,
     historical_keys: str | None = None,
+    valid_col: str | None = None,
 ):
     clock_ms = clock_ms or (lambda: int(time.time() * 1000))
 
@@ -244,8 +270,19 @@ def _make_dedup_fn(
             # its state (StateBaseAsyncDoFn.java:156-166).
             state.remove()
             return
+        chunks = [pdf for pdf in pdfs if len(pdf)]
+        if valid_col is not None:
+            chunks, invalid = _split_invalid(chunks, valid_col)
+            for pdf in invalid:
+                yield pdf.assign(send_status=INVALID)
         now = clock_ms()
         first_sent = state.get[0] if state.exists else None
+        if not chunks:
+            # Invalid rows only: the state stays as it is, and the
+            # timeout goes back on the deadline it had.
+            if first_sent is not None:
+                arm_timeout(state, first_sent + ttl_ms - now)
+            return
         if first_sent is not None and now - first_sent >= ttl_ms:
             # Deadline passed but the watermark has not reached it yet
             # (a key with data is never timed out) — expire inline.
@@ -260,7 +297,6 @@ def _make_dedup_fn(
             if state.exists:
                 state.remove()
             return
-        chunks = [pdf for pdf in pdfs if len(pdf)]
         out, first_sent = _apply_ttl_gate(chunks, first_sent, now, order_cols)
         if out is not None:
             yield out
@@ -279,12 +315,17 @@ def ttl_dedup(
     order_cols: list[str] | None = None,
     clock_ms=None,
     historical_keys: str | None = None,
+    valid_col: str | None = None,
 ) -> DataFrame:
     """Apply the TTL dedup gate to a streaming DataFrame keyed by
     ``idempotent_key``; the output is in update mode.
 
     ``historical_keys`` names a key file from ``ship_historical_keys``:
     a key with no live state that is in it is dropped (D3).
+
+    ``valid_col`` names a boolean input column: a row where it is not
+    true passes through once as ``INVALID`` and takes no part in the
+    gate (see the module docstring).
 
     The output is the input columns (every field nullable) plus
     ``send_status string``. ``clock_ms`` is injectable for
@@ -299,7 +340,7 @@ def ttl_dedup(
         stamped.groupBy(KEY_COL)
         .applyInPandasWithState(
             func=_make_dedup_fn(
-                ttl_ms, order_cols, clock_ms, historical_keys
+                ttl_ms, order_cols, clock_ms, historical_keys, valid_col
             ),
             outputStructType=struct_ddl(stamped.schema, "send_status string"),
             stateStructType=_STATE_SCHEMA,

@@ -9,10 +9,13 @@ live stream; these tests kill the query and restart it from
 - clean stop between micro-batches → per-key TTL state must survive
   the restart (a duplicate arriving after the restart is suppressed),
   and no pending input may be lost or re-sent;
-- a poisoned batch (sink raises before any send) → the failed batch's
-  state updates must NOT have committed, so the replay after restart
-  computes the identical SENT set and each key still hits the wire
-  exactly once;
+- a poisoned batch (the body raises after its dead-letter write and
+  before any send) → the failed batch's state updates must NOT have
+  committed, so the replay after restart computes the identical SENT
+  set, each key still hits the wire exactly once, and each invalid
+  record is under ``toxic/`` once;
+- a send checkpoint of the former two-query layout restarts under the
+  one-query pipeline;
 - the streaming MERGE sink restarted mid-stream converges to the exact
   upsert result, including across a poisoned (crashed-then-replayed)
   batch.
@@ -101,7 +104,7 @@ def _analytics_statuses(spark, analytics):
 
 @pytest.mark.slow
 def test_ttl_dedup_state_survives_clean_restart(spark):
-    """Stop the send query between micro-batches, restart from the
+    """Stop the pipeline's query between micro-batches, restart from the
     same checkpoint: a post-restart duplicate is still suppressed
     (state survived) and the new key is sent exactly once (no loss,
     no re-send of already-processed input)."""
@@ -141,9 +144,7 @@ def test_ttl_dedup_state_survives_clean_restart(spark):
         ), "first run never sent tx1/tx2"
     finally:
         queries["send_query"].stop()
-        queries["ko_query"].stop()
         queries["send_query"].awaitTermination()
-        queries["ko_query"].awaitTermination()
 
     # restart from the same checkpoint with a duplicate + a new key
     _drop_file(spark, [
@@ -158,9 +159,7 @@ def test_ttl_dedup_state_survives_clean_restart(spark):
         ), "restarted run never processed the second file"
     finally:
         queries["send_query"].stop()
-        queries["ko_query"].stop()
         queries["send_query"].awaitTermination()
-        queries["ko_query"].awaitTermination()
         server.shutdown()
 
     # zero duplicate sends: tx1 hit the wire ONCE despite the restart
@@ -168,15 +167,36 @@ def test_ttl_dedup_state_survives_clean_restart(spark):
     assert sent_titles == ["n1", "n2", "n4"]
 
 
+def _toxic_records(spark, toxic):
+    try:
+        return sorted(
+            (r.transaction_id, r.notification_id)
+            for r in spark.read.parquet(toxic).collect()
+        )
+    except Exception:  # noqa: BLE001 — not written yet
+        return []
+
+
 @pytest.mark.slow
 def test_ttl_dedup_poisoned_batch_replay_sends_once(spark):
-    """Kill the query MID-BATCH: the sink raises before any send on
-    its first encounter with the poisoned file. The failed batch's
-    state must not commit, so the restarted query replays it and the
-    new key is sent exactly once — while keys whose state committed
-    in earlier batches stay suppressed through the replay."""
+    """Kill the query MID-BATCH: on its first encounter with the
+    poisoned file the batch body writes the batch's invalid rows under
+    ``toxic/`` and then raises, before any send. The failed batch's
+    state must not commit, so the restarted query replays it: the new
+    key is sent exactly once, keys whose state committed in earlier
+    batches stay suppressed, and the replayed dead-letter write
+    replaces the epoch's own files, so each invalid record is under
+    ``toxic/`` once. (A crash after the sends would re-POST the epoch's
+    SENT rows: ``foreachBatch`` is at-least-once.)"""
     import datetime
 
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+
+    from scio_db_spark.sinks.files import (
+        idempotent_batch_writer,
+        write_windowed_batch,
+    )
     from scio_db_spark.streaming import mediation as med
 
     server, url = _start_stub()
@@ -184,71 +204,73 @@ def test_ttl_dedup_poisoned_batch_replay_sends_once(spark):
     input_dir = os.path.join(root, "in")
     os.makedirs(input_dir)
     analytics = os.path.join(root, "analytics")
+    toxic = os.path.join(root, "dead", "toxic")
     poison_flag = os.path.join(root, "poison_armed")
     open(poison_flag, "w").close()
     et = datetime.datetime(2024, 1, 1)
-
-    from pyspark.sql import DataFrame
-    from scio_db_spark.sinks.files import (
-        dead_letter_sink,
-        idempotent_batch_writer,
-    )
+    invalid = F.col("send_status") == "INVALID"
 
     def _start():
         stream = spark.readStream.schema(FLAT).parquet(input_dir)
-        core = med.build_mediation_core(stream, ttl_seconds=3600)
-        ko_q = dead_letter_sink(
-            core["ko"], os.path.join(root, "dead"),
-            os.path.join(root, "ck", "ko"),
-        )
+        gated = med.build_mediation_core(stream, ttl_seconds=3600)
         writer = idempotent_batch_writer(analytics)
 
         def _process(batch_df: DataFrame, epoch_id: int) -> None:
-            # poison: die BEFORE any send while the flag is armed and
-            # the batch holds the poisoned transaction
-            if os.path.exists(poison_flag) and batch_df.filter(
-                "transaction_id = 'txP'"
-            ).count() > 0:
-                os.remove(poison_flag)
-                raise RuntimeError("simulated mid-batch worker death")
-            out = med.send_deduped_batch(
-                batch_df, url, retries=0, throttle_rps=None
-            )
-            writer(out, epoch_id)
+            batch_df.persist()
+            try:
+                write_windowed_batch(
+                    batch_df.where(invalid).drop("send_status"), toxic,
+                    epoch_id=epoch_id,
+                )
+                # poison: die after the dead-letter write and before
+                # any send while the flag is armed and the batch holds
+                # the poisoned transaction
+                if os.path.exists(poison_flag) and batch_df.filter(
+                    "transaction_id = 'txP'"
+                ).count() > 0:
+                    os.remove(poison_flag)
+                    raise RuntimeError("simulated mid-batch worker death")
+                out = med.send_deduped_batch(
+                    batch_df.where(~invalid), url, retries=0,
+                    throttle_rps=None,
+                )
+                writer(out, epoch_id)
+            finally:
+                batch_df.unpersist()
 
-        send_q = (
-            core["deduped"].writeStream.foreachBatch(_process)
+        return (
+            gated.writeStream.foreachBatch(_process)
             .outputMode("update")
             .option(
                 "checkpointLocation", os.path.join(root, "ck", "send")
             )
             .start()
         )
-        return send_q, ko_q
 
     # batch 1: commit state for tx1
     _drop_file(spark, [Row("tx1", "n1", "1", "m", et, 1.0)], FLAT, input_dir)
-    send_q, ko_q = _start()
+    send_q = _start()
     assert _wait_until(
         lambda: ("tx1", "SENT") in _analytics_statuses(spark, analytics)
     ), "tx1 never sent"
 
-    # batch 2 (poisoned): duplicate of tx1 + new key txP → sink dies
+    # batch 2 (poisoned): duplicate of tx1 + new key txP + an invalid
+    # record → the body dies after writing the invalid one
     _drop_file(spark, [
         Row("tx1", "n1", "1", "m", et, 2.0),
         Row("txP", "nP", "9", "m", et, 1.0),
+        Row("txQ", None, "9", "m", et, 1.0),
     ], FLAT, input_dir)
     assert _wait_until(
         lambda: not send_q.isActive, timeout=90.0
     ), "poisoned batch never killed the query"
-    ko_q.stop()
-    ko_q.awaitTermination()
     assert not os.path.exists(poison_flag)  # it died ON the poison
+    assert _toxic_records(spark, toxic) == [("txQ", None)]
     # nothing from the failed batch reached the wire
     assert [r["title"] for r in server.requests] == ["n1"]
 
     # restart: the poisoned batch replays against UNCOMMITTED state
-    send_q, ko_q = _start()
+    send_q = _start()
     try:
         assert _wait_until(
             lambda: {("txP", "SENT"), ("tx1", "SENT_OR_DUPLICATED")}
@@ -256,14 +278,95 @@ def test_ttl_dedup_poisoned_batch_replay_sends_once(spark):
         ), "replayed batch never completed after restart"
     finally:
         send_q.stop()
-        ko_q.stop()
         send_q.awaitTermination()
-        ko_q.awaitTermination()
         server.shutdown()
 
     # exactly-once at the wire across the crash: tx1 once, txP once
     sent_titles = sorted(r["title"] for r in server.requests)
     assert sent_titles == ["n1", "nP"]
+    # the replay overwrote its epoch's dead letters: txQ once
+    assert _toxic_records(spark, toxic) == [("txQ", None)]
+
+
+@pytest.mark.slow
+def test_send_checkpoint_of_two_query_layout_restarts(spark):
+    """A send checkpoint written by the former two-query layout, whose
+    TTL gate saw the valid rows only, restarts under
+    ``run_mediation_pipeline``: the gate's input gained the validity
+    flag, its state schema did not change. The key sent before the
+    switch stays suppressed, the new key is sent once, and the invalid
+    record reaches ``toxic/``."""
+    import datetime
+
+    from scio_db_spark.observability import observe_metrics, validity_metrics
+    from scio_db_spark.operators.keying import with_idempotent_key
+    from scio_db_spark.operators.validity import is_valid_ber
+    from scio_db_spark.sinks.files import idempotent_batch_writer
+    from scio_db_spark.sinks.http_sink import send_http_batch, to_http_request
+    from scio_db_spark.streaming.mediation import run_mediation_pipeline
+    from scio_db_spark.streaming.ttl_dedup import ttl_dedup
+
+    server, url = _start_stub()
+    root = tempfile.mkdtemp(prefix="layout_switch_")
+    input_dir = os.path.join(root, "in")
+    os.makedirs(input_dir)
+    analytics = os.path.join(root, "analytics")
+    ck = os.path.join(root, "ck")
+    et = datetime.datetime(2024, 1, 1)
+
+    # The former send query: gate metrics, valid rows only, the gate,
+    # the request projection, then send + analytics per micro-batch.
+    _drop_file(spark, [Row("tx1", "n1", "1", "m", et, 1.0)], FLAT, input_dir)
+    stream = spark.readStream.schema(FLAT).parquet(input_dir)
+    flagged = with_idempotent_key(
+        stream, "transaction_id", "customer_id"
+    ).withColumn("__is_valid", is_valid_ber())
+    ok = (
+        observe_metrics(
+            flagged, "mediation_gate", validity_metrics("__is_valid")
+        )
+        .filter("__is_valid")
+        .drop("__is_valid")
+    )
+    writer = idempotent_batch_writer(analytics)
+    to_http_request(ttl_dedup(ok, ttl_seconds=3600)).writeStream.foreachBatch(
+        lambda b, e: writer(
+            send_http_batch(b, url, retries=0, throttle_rps=None), e
+        )
+    ).outputMode("update").option(
+        "checkpointLocation", os.path.join(ck, "send")
+    ).trigger(availableNow=True).start().awaitTermination()
+    assert [r["title"] for r in server.requests] == ["n1"]
+
+    _drop_file(spark, [
+        Row("tx1", "n1", "1", "m", et, 2.0),
+        Row("tx5", "n5", "5", "m", et, 1.0),
+        Row(None, "n6", "6", "m", et, 1.0),
+    ], FLAT, input_dir)
+    queries = run_mediation_pipeline(
+        spark.readStream.schema(FLAT).parquet(input_dir),
+        url=url,
+        checkpoint_dir=ck,
+        dead_letter_path=os.path.join(root, "dead"),
+        analytics_path=analytics,
+        ttl_seconds=3600,
+        trigger={"availableNow": True},
+        retries=0,
+        throttle_rps=None,
+    )
+    try:
+        assert queries["send_query"].awaitTermination(120)
+        assert queries["send_query"].exception() is None
+    finally:
+        queries["send_query"].stop()
+        server.shutdown()
+    assert sorted(r["title"] for r in server.requests) == ["n1", "n5"]
+    assert _analytics_statuses(spark, analytics) == {
+        ("tx1", "SENT"), ("tx1", "SENT_OR_DUPLICATED"), ("tx5", "SENT"),
+    }
+    assert _toxic_records(spark, os.path.join(root, "dead", "toxic")) == [
+        (None, "n6")
+    ]
 
 
 @pytest.mark.slow

@@ -1,6 +1,7 @@
-"""Full-pipeline integration test: run_mediation_pipeline with both
-sinks attached (HTTP send + dead-letter), driven by a file-drop source
-against a local HTTP stub — the complete SURVEY.md §3.1 dataflow.
+"""Full-pipeline integration test: run_mediation_pipeline, one query
+whose micro-batch sends, writes analytics and writes dead letters,
+driven by a file-drop source against a local HTTP stub — the complete
+SURVEY.md §3.1 dataflow.
 """
 
 from __future__ import annotations
@@ -89,12 +90,12 @@ def _start_pipeline(spark, url, root, rows=None, **kwargs) -> dict:
     )
 
     stream = spark.readStream.schema(FLAT).parquet(input_dir)
+    kwargs.setdefault("analytics_path", os.path.join(root, "analytics"))
     return run_mediation_pipeline(
         stream,
         url=url,
         checkpoint_dir=os.path.join(root, "ck"),
         dead_letter_path=os.path.join(root, "dead"),
-        analytics_path=os.path.join(root, "analytics"),
         ttl_seconds=3600,
         window_duration="30 seconds",
         retries=0,
@@ -151,19 +152,25 @@ def test_run_mediation_pipeline_end_to_end(spark):
 
 
 @pytest.mark.slow
-def test_available_now_trigger_ends_both_queries(spark):
-    """A bounded run (``trigger={"availableNow": True}``) drains the
-    input and ends: the dead-letter query runs under the same trigger
-    as the send query, so neither keeps polling for new files."""
+def test_available_now_runs_one_query_that_ends(spark):
+    """A bounded run (``trigger={"availableNow": True}``) starts one
+    streaming query, with one checkpoint, which drains the input, sends,
+    writes the dead letters and ends. ``ko_query`` names that same
+    query; no ``<checkpoint_dir>/ko`` is created."""
     server, url = _start_stub()
     root = tempfile.mkdtemp(prefix="med_e2e_now_")
+    before = {q.id for q in spark.streams.active}
     queries = _start_pipeline(
         spark, url, root, trigger={"availableNow": True}
     )
     try:
-        for name, q in queries.items():
-            assert q.awaitTermination(60), f"{name} still running"
-            assert q.exception() is None, name
+        started = {q.id for q in spark.streams.active} - before
+        assert started == {queries["send_query"].id}
+        assert queries["ko_query"] is queries["send_query"]
+        q = queries["send_query"]
+        assert q.awaitTermination(60), "query still running"
+        assert q.exception() is None
+        assert os.listdir(os.path.join(root, "ck")) == ["send"]
         assert _status_counts(spark, os.path.join(root, "analytics")) == {
             "SENT": 2, "SENT_OR_DUPLICATED": 1
         }
@@ -255,3 +262,74 @@ def test_checkpoint_survives_switch_from_available_now_to_continuous(spark):
         for q in queries.values():
             q.stop()
         server.shutdown()
+
+
+def _dup_rows():
+    """Three rows of tx1 (n1 first by ``ts``) and one of tx2."""
+    import datetime
+
+    et = datetime.datetime(2024, 1, 1, 0, 0, 0)
+    return [
+        Row("tx1", "n1", "7", "m", et, 1.0),
+        Row("tx1", "n1b", "7", "m", et, 2.0),
+        Row("tx1", "n1c", "7", "m", et, 3.0),
+        Row("tx2", "n2", "8", "m", et, 1.0),
+    ]
+
+
+@pytest.mark.slow
+def test_pipeline_posts_sent_rows_and_answers_duplicates(spark):
+    """Each SENT row is POSTed once, and each duplicate gets the
+    constant response without a POST, in the analytics rows of the
+    pipeline's one send pass. A batch with no invalid row writes no
+    dead letters."""
+    from scio_db_spark.schemas import NOT_HTTP_RESPONSE_ID
+
+    server, url = _start_stub()
+    root = tempfile.mkdtemp(prefix="med_e2e_dup_")
+    q = _start_pipeline(
+        spark, url, root, rows=_dup_rows(), order_cols=["ts"],
+        trigger={"availableNow": True},
+    )["send_query"]
+    try:
+        assert q.awaitTermination(60) and q.exception() is None
+    finally:
+        q.stop()
+        server.shutdown()
+    assert sorted(req["title"] for req in server.requests) == ["n1", "n2"]
+    out = {
+        r.notification_id: r
+        for r in spark.read.parquet(os.path.join(root, "analytics")).collect()
+    }
+    assert sorted(out) == ["n1", "n1b", "n1c", "n2"]
+    for nid in ("n1", "n2"):
+        assert out[nid].send_status == "SENT"
+        assert out[nid].resp_id == 101 and out[nid].nhub_success
+    for nid in ("n1b", "n1c"):
+        r = out[nid]
+        assert r.send_status == "SENT_OR_DUPLICATED"
+        assert (r.resp_id, r.resp_body, r.resp_user_id) == (
+            NOT_HTTP_RESPONSE_ID, "SENT_OR_DUPLICATED", 7,
+        )
+        assert r.nhub_success and r.send_latency_ms == 0
+    # no invalid row, so no dead-letter write
+    assert not os.path.exists(os.path.join(root, "dead"))
+
+
+@pytest.mark.slow
+def test_pipeline_without_analytics_still_sends(spark):
+    """Without an analytics path the pipeline still forces the sends:
+    each SENT row is POSTed once and no duplicate is POSTed."""
+    server, url = _start_stub()
+    root = tempfile.mkdtemp(prefix="med_e2e_send_only_")
+    q = _start_pipeline(
+        spark, url, root, rows=_dup_rows(), analytics_path=None,
+        order_cols=["ts"], trigger={"availableNow": True},
+    )["send_query"]
+    try:
+        assert q.awaitTermination(60) and q.exception() is None
+    finally:
+        q.stop()
+        server.shutdown()
+    assert sorted(req["title"] for req in server.requests) == ["n1", "n2"]
+    assert not os.path.exists(os.path.join(root, "analytics"))

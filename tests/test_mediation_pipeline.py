@@ -38,7 +38,7 @@ def test_mediation_core_end_to_end(spark):
     h.start(
         lambda s: build_mediation_core(
             s, historical_df=hist, ttl_seconds=3600, order_cols=["ts"],
-        )["deduped"]
+        )
     )
     h.add_batch(
         [
@@ -57,6 +57,7 @@ def test_mediation_core_end_to_end(spark):
     assert by_key["tx3-3"] == ["SENT"]
     assert "tx0-9" not in by_key          # dropped by the gate's probe
     assert not any(k.startswith("n2") for k in by_key)  # invalid not sent
+    assert by_key["null-2"] == ["INVALID"]  # routed to the KO branch
 
     # Second batch: tx1-1 still inside TTL -> duplicate.
     h.add_batch([_ber("tx1", "n1", "1", ts=9.0)])
@@ -113,7 +114,7 @@ def test_historical_set_is_read_once_at_build(spark, tmp_path):
     h.start(
         lambda s: build_mediation_core(
             s, historical_df=hist, ttl_seconds=3600,
-        )["deduped"]
+        )
     )
     try:
         h.add_batch([_ber("tx1", "n1", "1")])
@@ -145,7 +146,7 @@ def test_rebuild_over_changed_historical_dir_drops_new_key(
         lambda s: build_mediation_core(
             s, historical_df=spark.read.parquet(str(hist_dir)),
             ttl_seconds=3600,
-        )["deduped"]
+        )
     )
     try:
         h.add_batch([_ber("tx0", "n0", "9"), _ber("tx1", "n1", "1")])
@@ -170,7 +171,7 @@ def test_invalid_row_with_historical_key_reaches_ko(spark):
     h.start(
         lambda s: build_mediation_core(
             s, historical_df=hist, ttl_seconds=3600,
-        )["ko"]
+        )
     )
     try:
         h.add_batch([_ber("tx0", None, "9"), _ber("tx0", "n0", "9")])
@@ -204,12 +205,12 @@ def test_size_statistics_pick_the_historical_join(spark, tmp_path, threshold):
             wait=False,
         )
         stream = spark.readStream.schema(FLAT).parquet(h.input_dir)
-        deduped = build_mediation_core(
+        gated = build_mediation_core(
             stream, historical_df=spark.read.parquet(str(hist_dir)),
             ttl_seconds=3600,
-        )["deduped"]
+        )
         query = (
-            deduped.writeStream.foreachBatch(
+            gated.writeStream.foreachBatch(
                 lambda b, _e: out.extend(b.collect())
             )
             .outputMode("update")
@@ -259,3 +260,127 @@ def test_rebuild_over_unchanged_files_ships_nothing_new(spark, tmp_path):
         stream, historical_df=spark.read.parquet(str(hist_dir))
     )
     assert len(set(sc.listFiles) - shipped) == 1
+
+
+@pytest.fixture
+def notify_stub():
+    """A local endpoint that records each POSTed payload; yields
+    ``(requests, url)``."""
+    import json
+    import threading
+    from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
+
+    class _Stub(BaseHTTPRequestHandler):
+        protocol_version = "HTTP/1.1"
+
+        def do_POST(self):  # noqa: N802
+            n = int(self.headers.get("Content-Length", 0))
+            payload = json.loads(self.rfile.read(n) or b"{}")
+            self.server.requests.append(payload)
+            body = json.dumps({**payload, "id": 101}).encode()
+            self.send_response(201)
+            self.send_header("Content-Length", str(len(body)))
+            self.end_headers()
+            self.wfile.write(body)
+
+        def log_message(self, *a):
+            pass
+
+    server = ThreadingHTTPServer(("127.0.0.1", 0), _Stub)
+    server.requests = []
+    threading.Thread(target=server.serve_forever, daemon=True).start()
+    yield server.requests, f"http://127.0.0.1:{server.server_address[1]}/p"
+    server.shutdown()
+
+
+def test_invalid_row_sharing_a_valid_key_goes_to_toxic_only(
+    spark, tmp_path, notify_stub
+):
+    """One batch holds a valid row and an invalid row (null
+    notification id) with the same key. The valid row is SENT and
+    POSTed once; the invalid row is written under ``toxic/`` only, and
+    is never SENT."""
+    import datetime
+
+    from scio_db_spark.streaming.mediation import run_mediation_pipeline
+
+    requests, url = notify_stub
+    et = datetime.datetime(2024, 1, 1)
+    schema = FLAT + ", event_time timestamp"
+    src = tmp_path / "in"
+    spark.createDataFrame(
+        [
+            Row("tx1", "n1", "1", "m", 1.0, et),
+            Row("tx1", None, "1", "m", 2.0, et),
+        ],
+        schema,
+    ).coalesce(1).write.parquet(str(src))
+    queries = run_mediation_pipeline(
+        spark.readStream.schema(schema).parquet(str(src)),
+        url=url,
+        checkpoint_dir=str(tmp_path / "ck"),
+        dead_letter_path=str(tmp_path / "dead"),
+        analytics_path=str(tmp_path / "analytics"),
+        ttl_seconds=3600,
+        trigger={"availableNow": True},
+        retries=0,
+        throttle_rps=None,
+    )
+    assert queries["send_query"].awaitTermination(120)
+    assert queries["send_query"].exception() is None
+
+    analytics = spark.read.parquet(str(tmp_path / "analytics")).collect()
+    assert [(r.notification_id, r.send_status) for r in analytics] == [
+        ("n1", "SENT")
+    ]
+    assert [p["title"] for p in requests] == ["n1"]
+    toxic = spark.read.parquet(str(tmp_path / "dead" / "toxic")).collect()
+    assert [(r.idempotent_key, r.notification_id, r.ts) for r in toxic] == [
+        ("tx1-1", None, 2.0)
+    ]
+
+
+def _state_rows(progress: list) -> int:
+    return progress[-1]["stateOperators"][0]["numRowsTotal"]
+
+
+def test_invalid_only_visit_keeps_the_keys_state(spark):
+    """A batch that holds only an invalid row for a key with live state
+    leaves that state alone: the key still holds one state row, and a
+    later valid copy inside the TTL is SENT_OR_DUPLICATED."""
+    h = StreamHarness(spark, FLAT)
+    h.start(lambda s: build_mediation_core(s, ttl_seconds=3600))
+    try:
+        h.add_batch([_ber("tx1", "n1", "1")])
+        progress = h.add_batch([_ber("tx1", None, "1", ts=2.0)])
+        assert _state_rows(progress) == 1
+        h.add_batch([_ber("tx1", "n1", "1", ts=3.0)])
+        rows = h.results()
+    finally:
+        h.stop()
+    assert [(r.ts, r.send_status) for r in rows] == [
+        (1.0, "SENT"), (2.0, "INVALID"), (3.0, "SENT_OR_DUPLICATED"),
+    ]
+
+
+def test_invalid_only_visit_keeps_the_keys_timeout(spark):
+    """An invalid-only visit re-arms the key's timeout on its old
+    deadline (Spark drops a timeout the state function does not set):
+    once a later batch moves the batch clock past that deadline, the
+    key's state is removed. With a 1 s TTL, the key of the first batch
+    has expired by the time of the third."""
+    import time
+
+    h = StreamHarness(spark, FLAT)
+    h.start(lambda s: build_mediation_core(s, ttl_seconds=1))
+    try:
+        h.add_batch([_ber("tx1", "n1", "1")])
+        time.sleep(1.5)
+        progress = h.add_batch([_ber("tx1", None, "1", ts=2.0)])
+        assert _state_rows(progress) == 1
+        time.sleep(1.5)
+        progress = h.add_batch([_ber("tx2", "n2", "2")])
+    finally:
+        h.stop()
+    # tx1-1 removed; tx2-2 (sent just now) is the one live key.
+    assert _state_rows(progress) == 1

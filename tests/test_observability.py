@@ -56,7 +56,7 @@ def test_streaming_observed_metrics_per_microbatch(spark, tmp_path):
 
 def test_mediation_gate_metrics_ride_the_pipeline(spark, tmp_path):
     # The mediation core reports its OK/KO gate counts per micro-batch
-    # without a count branch — on every query built from its outputs.
+    # without a count branch, on the one query built on its gated plan.
     from pyspark.sql import Row
 
     from scio_db_spark.streaming.mediation import build_mediation_core
@@ -73,9 +73,10 @@ def test_mediation_gate_metrics_ride_the_pipeline(spark, tmp_path):
         "transaction_id string, notification_id string, "
         "customer_id string, message string, ts double"
     ).parquet(src)
-    core = build_mediation_core(stream, ttl_seconds=3600)
+    gated = build_mediation_core(stream, ttl_seconds=3600)
     q = (
-        core["ko"].writeStream.format("noop")
+        gated.writeStream.format("noop")
+        .outputMode("update")
         .option("checkpointLocation", str(tmp_path / "ck"))
         .trigger(availableNow=True)
         .start()

@@ -385,72 +385,6 @@ DEDUP_IN = (
 )
 
 
-def _sink_over_ttl_dedup(spark, http_stub, analytics: bool) -> dict:
-    """Run ``http_notification_sink`` over ``ttl_dedup`` output for one
-    batch holding three rows of k1 and one of k2; return the analytics
-    rows by notification id (empty when ``analytics`` is off)."""
-    from scio_db_spark.sinks import http_notification_sink, to_http_request
-    from scio_db_spark.streaming.harness import StreamHarness
-    from scio_db_spark.streaming.ttl_dedup import ttl_dedup
-
-    h = StreamHarness(spark, DEDUP_IN)
-    try:
-        h.add_batch(
-            [
-                Row("k1", "n1", "m", "7", 1.0),
-                Row("k1", "n1b", "m", "7", 2.0),
-                Row("k1", "n1c", "m", "7", 3.0),
-                Row("k2", "n2", "m", "8", 1.0),
-            ],
-            wait=False,
-        )
-        stream = spark.readStream.schema(DEDUP_IN).parquet(h.input_dir)
-        deduped = ttl_dedup(stream, ttl_seconds=3600, order_cols=["ts"])
-        path = os.path.join(h.checkpoint_dir, "analytics")
-        http_notification_sink(
-            to_http_request(deduped), _url(http_stub),
-            os.path.join(h.checkpoint_dir, "send"),
-            analytics_path=path if analytics else None,
-            trigger={"availableNow": True},
-            retries=0, throttle_rps=None,
-        ).awaitTermination()
-        if not analytics:
-            return {}
-        return {
-            r.notification_id: r for r in spark.read.parquet(path).collect()
-        }
-    finally:
-        h.stop()
-
-
-def test_http_notification_sink_takes_ttl_dedup_output(spark, http_stub):
-    """The streaming sink accepts the update-mode output of
-    ``ttl_dedup``: each SENT row is POSTed once, and each duplicate gets
-    the constant response without a POST."""
-    from scio_db_spark.schemas import NOT_HTTP_RESPONSE_ID
-
-    out = _sink_over_ttl_dedup(spark, http_stub, analytics=True)
-    assert sorted(req["title"] for req in http_stub.requests) == ["n1", "n2"]
-    assert sorted(out) == ["n1", "n1b", "n1c", "n2"]
-    for nid in ("n1", "n2"):
-        assert out[nid].send_status == "SENT"
-        assert out[nid].resp_id == 101 and out[nid].nhub_success
-    for nid in ("n1b", "n1c"):
-        r = out[nid]
-        assert r.send_status == "SENT_OR_DUPLICATED"
-        assert (r.resp_id, r.resp_body, r.resp_user_id) == (
-            NOT_HTTP_RESPONSE_ID, "SENT_OR_DUPLICATED", 7,
-        )
-        assert r.nhub_success and r.send_latency_ms == 0
-
-
-def test_http_notification_sink_send_only(spark, http_stub):
-    """Without an analytics path the sink still forces the sends: each
-    SENT row is POSTed once and no duplicate is POSTed."""
-    _sink_over_ttl_dedup(spark, http_stub, analytics=False)
-    assert sorted(req["title"] for req in http_stub.requests) == ["n1", "n2"]
-
-
 def _file_clock(path: str):
     """A ``clock_ms`` for Python workers, which share no memory: each
     call returns the next reading scheduled in the JSON file at
